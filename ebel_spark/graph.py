@@ -777,35 +777,7 @@ def triangle_counts(edges: DataFrame, src: str = "u", dst: str = "v") -> DataFra
     Returns (bel, n_triangles) for nodes in >= 1 triangle.
     """
     und = undirected_edges(edges, src, dst).transform(cut_lineage)
-    deg = (
-        und.select(F.col("a").alias("n"))
-        .unionAll(und.select(F.col("b").alias("n")))
-        .groupBy("n")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-    keyed = (
-        und.join(deg.select(F.col("n").alias("a"), F.col("d").alias("da")), "a")
-        .join(deg.select(F.col("n").alias("b"), F.col("d").alias("db")), "b")
-        .select(
-            "a", "b",
-            F.struct(F.col("da").alias("d"), F.col("a").alias("n")).alias("ka"),
-            F.struct(F.col("db").alias("d"), F.col("b").alias("n")).alias("kb"),
-        )
-    )
-    oriented = keyed.select(
-        F.when(F.col("ka") < F.col("kb"), F.col("a")).otherwise(F.col("b")).alias("s"),
-        F.when(F.col("ka") < F.col("kb"), F.col("b")).otherwise(F.col("a")).alias("t"),
-        F.when(F.col("ka") < F.col("kb"), F.col("kb")).otherwise(F.col("ka")).alias("kt"),
-    ).transform(cut_lineage)
-    o1 = oriented.select(F.col("s"), F.col("t").alias("v"), F.col("kt").alias("kv"))
-    o2 = oriented.select(F.col("s"), F.col("t").alias("w"), F.col("kt").alias("kw"))
-    wedges = (
-        o1.join(o2, "s")
-        .filter(F.col("kv") < F.col("kw"))
-        .select("s", "v", "w")
-    )
-    closing = oriented.select(F.col("s").alias("v"), F.col("t").alias("w"))
-    tris = wedges.join(closing, ["v", "w"], "left_semi")
+    tris = _triangles_of_oriented(_orient_by_degree(und))
     return (
         tris.select(F.explode(F.array("s", "v", "w")).alias("bel"))
         .groupBy("bel")
@@ -829,11 +801,10 @@ def edge_support(edges: DataFrame, src: str = "u", dst: str = "v") -> DataFrame:
     return _edge_support_und(und)
 
 
-def _support_of_oriented(oriented: DataFrame) -> DataFrame:
-    """Per-undirected-edge triangle support from an already-ORIENTED frame
-    with columns (s, t, kt) — compact-forward wedge join + semi-join close,
-    each triangle crediting its three edges.  Shared by _edge_support_und
-    and every ktruss_peel round.  Returns (a, b, support), a < b."""
+def _triangles_of_oriented(oriented: DataFrame) -> DataFrame:
+    """Every triangle of an ORIENTED frame (s, t, kt), exactly once, as
+    (s, v, w): the compact-forward wedge join (two edges leaving s, in key
+    order) closed by a semi-join on the oriented edge v -> w."""
     o1 = oriented.select(F.col("s"), F.col("t").alias("v"), F.col("kt").alias("kv"))
     o2 = oriented.select(F.col("s"), F.col("t").alias("w"), F.col("kt").alias("kw"))
     wedges = (
@@ -842,7 +813,15 @@ def _support_of_oriented(oriented: DataFrame) -> DataFrame:
         .select("s", "v", "w")
     )
     closing = oriented.select(F.col("s").alias("v"), F.col("t").alias("w"))
-    tris = wedges.join(closing, ["v", "w"], "left_semi")
+    return wedges.join(closing, ["v", "w"], "left_semi")
+
+
+def _support_of_oriented(oriented: DataFrame) -> DataFrame:
+    """Per-undirected-edge triangle support from an already-ORIENTED frame
+    with columns (s, t, kt), each triangle crediting its three edges.
+    Shared by _edge_support_und and every ktruss_peel round.  Returns
+    (a, b, support), a < b."""
+    tris = _triangles_of_oriented(oriented)
     pair = (lambda x, y: F.struct(F.least(x, y).alias("a"),
                                   F.greatest(x, y).alias("b")))
     return (
@@ -909,8 +888,11 @@ def ktruss_peel(
     (one driver-side count() over the already-checkpointed frame, so it
     schedules no recompute) and peeling stops when no edge dropped,
     bounded by `max_rounds`.  The output then carries a constant
-    `converged` column — false only if max_rounds was hit first, the
-    convergence signal a fixed unrolling cannot give.  The fixed-`rounds`
+    `converged` column, the signal a fixed unrolling cannot give:
+    converged is true iff one of the first `max_rounds` rounds removed no
+    edge.  A graph that still drops an edge in round `max_rounds` reports
+    false, even if round max_rounds + 1 would have removed nothing (that
+    round is never run).  The fixed-`rounds`
     mode is kept as the oracle-twin protocol (DuckDB unrolls the same
     round count).
     The edge-centric sibling of kcore_peel: where k-core trims low-degree
@@ -939,27 +921,20 @@ def ktruss_peel(
     converged = True  # k <= 2: the whole graph IS the k-truss, trivially
 
     if k > 2:
-        if fixpoint:
-            converged = False
-            prev = o.count()
-            for _ in range(max_rounds):
-                sup = _support_of_oriented(o)
-                o = o.join(
-                    sup.filter(F.col("support") >= k - 2).select("a", "b"),
-                    ["a", "b"], "left_semi",
-                ).transform(cut_lineage)
+        converged = False
+        prev = o.count() if fixpoint else None
+        for _ in range(max_rounds if fixpoint else rounds):
+            sup = _support_of_oriented(o)
+            o = o.join(
+                sup.filter(F.col("support") >= k - 2).select("a", "b"),
+                ["a", "b"], "left_semi",
+            ).transform(cut_lineage)
+            if fixpoint:
                 n = o.count()
                 if n == prev:
                     converged = True
                     break
                 prev = n
-        else:
-            for _ in range(rounds):
-                sup = _support_of_oriented(o)
-                o = o.join(
-                    sup.filter(F.col("support") >= k - 2).select("a", "b"),
-                    ["a", "b"], "left_semi",
-                ).transform(cut_lineage)
     final = _support_of_oriented(o)
     out = (
         o.select("a", "b").join(final, ["a", "b"], "left")
@@ -1596,7 +1571,7 @@ def path_query(
         F.col("subject_bel").alias("s"), F.col("subject_class").alias("sc"),
         F.col("object_bel").alias("o"), F.col("object_class").alias("oc"),
     )
-    if max_subgraph_edges:
+    if max_subgraph_edges is not None:
         n_sub = e.count()
         if n_sub > max_subgraph_edges:
             raise PathExplosionError(
@@ -1961,7 +1936,7 @@ def cycle_edges(
     Returns (u, v, cycle_len) for edges on a cycle, cycle_len >= 2.
     """
     e = (edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-         .filter(F.col(src) != F.col(dst)).distinct()
+         .filter(F.col("u") != F.col("v")).distinct()
          .transform(cut_lineage))
     reach = e.select(F.col("u").alias("a"), F.col("v").alias("b"),
                      F.lit(1).alias("hops"))

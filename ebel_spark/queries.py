@@ -18,6 +18,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
+from . import graph as G
+from . import link as L
+from . import parse as P
 from .ops import dedup as D
 from .ops import sample as S
 from .ops import text as T
@@ -3043,13 +3046,58 @@ def _bel_oracle_parsed(spark):
     from pyspark import StorageLevel
 
     from .corpus import CorpusProfile, corpus_spark
-    from . import parse as P
     _ensure_oracle()
     profile = CorpusProfile(n_files=_OF, statements_per_file=_OS)
     parsed = (P.parse_sources(corpus_spark(spark, profile, partitions=8))
               .persist(StorageLevel.MEMORY_AND_DISK))
     _BEL_PARSED_MEMO[key] = parsed
     return parsed
+
+
+# The oracle KG, derived in one place: every bel_* query takes its
+# statements, edges and nodes from the functions below, so "what is a KG
+# edge" is decided once.  Each call returns a fresh lazy DataFrame over the
+# one persisted parsed corpus; nothing here is cached on its own.
+def _kg_statements(spark) -> DataFrame:
+    """Per-assertion statement rows of the parseable oracle files."""
+    return P.statements_table(_bel_oracle_parsed(spark).filter("ok"))
+
+
+def _kg_edge_statements(spark) -> DataFrame:
+    """The statements that make a KG edge (an edge key, not nested), one
+    row per assertion: repeated assertions keep their multiplicity."""
+    return _kg_statements(spark).filter(
+        F.col("edge_key").isNotNull() & ~F.col("nested"))
+
+
+def _kg_pairs(spark) -> DataFrame:
+    """(u, v) = (subject, object) per edge statement, multiplicity kept."""
+    return _kg_edge_statements(spark).select(
+        F.col("subject_bel").alias("u"), F.col("object_bel").alias("v"))
+
+
+def _kg_uv_edges(spark) -> DataFrame:
+    """The directed KG as a distinct (u, v) edge list."""
+    return _kg_pairs(spark).distinct()
+
+
+def _kg_edges(spark) -> DataFrame:
+    """The deduplicated edge table (graph.materialize_edges)."""
+    return G.materialize_edges(_kg_statements(spark))
+
+
+def _kg_nodes(spark) -> DataFrame:
+    """The deduplicated node table (graph.materialize_nodes)."""
+    return G.materialize_nodes(
+        P.nodes_table(_bel_oracle_parsed(spark).filter("ok")))
+
+
+def _kg_linked_nodes(spark) -> DataFrame:
+    """The node table after the HGNC -> UniProt linking chain."""
+    from .namespaces import build_dimensions, dims_to_spark
+    nodes = _kg_nodes(spark)
+    dims = dims_to_spark(spark, build_dimensions())
+    return L.link_uniprot(L.link_hgnc(nodes, dims["hgnc"]), dims["uniprot"])
 
 
 @q("bel_relation_counts", f"""
@@ -3060,10 +3108,9 @@ GROUP BY relation, relation_category
 """)
 def bel_relation_counts(spark, sf_dir):
     """Distributed parse + explode vs the pandas-parsed statement table."""
-    from . import parse as P
-    st = P.statements_table(_bel_oracle_parsed(spark).filter("ok"))
     return (
-        st.filter(F.col("relation").isNotNull() & ~F.col("nested"))
+        _kg_statements(spark)
+        .filter(F.col("relation").isNotNull() & ~F.col("nested"))
         .groupBy("relation", "relation_category")
         .agg(F.count(F.lit(1)).alias("n_statements"))
     )
@@ -3079,11 +3126,7 @@ GROUP BY relation
 def bel_edge_dedup_counts(spark, sf_dir):
     """Salted two-phase edge dedup (graph.py:materialize_edges) vs a plain
     SQL count(DISTINCT profile-key) over the same statements."""
-    from . import graph as G
-    from . import parse as P
-    parsed = _bel_oracle_parsed(spark)
-    edges = G.materialize_edges(P.statements_table(parsed.filter("ok")))
-    return edges.groupBy("relation").agg(
+    return _kg_edges(spark).groupBy("relation").agg(
         F.count(F.lit(1)).alias("n_edges"),
         F.sum("n_statements").alias("n_statements"),
     )
@@ -3114,12 +3157,8 @@ def bel_edge_filter_algebra(spark, sf_dir):
     re-derives the same edges in SQL (payload via max(): every selected
     column is functionally determined by the 7-tuple edge profile in this
     corpus, incl. pub_date via citation_ref)."""
-    from . import graph as G
-    from . import parse as P
-    edges = G.materialize_edges(
-        P.statements_table(_bel_oracle_parsed(spark).filter("ok")))
     return (
-        edges.filter(
+        _kg_edges(spark).filter(
             F.col("relation").isin("increases", "decreases")
             & F.col("citation.pub_date").between("2010-01-01", "2016-12-31")
             & F.col("subject_bel").startswith("p(")
@@ -3137,11 +3176,7 @@ GROUP BY node_class
 """)
 def bel_node_class_counts(spark, sf_dir):
     """Node dedup (graph.py:materialize_nodes) vs SQL count(DISTINCT bel)."""
-    from . import graph as G
-    from . import parse as P
-    parsed = _bel_oracle_parsed(spark)
-    nodes = G.materialize_nodes(P.nodes_table(parsed.filter("ok")))
-    return nodes.groupBy("node_class").agg(
+    return _kg_nodes(spark).groupBy("node_class").agg(
         F.count(F.lit(1)).alias("n_nodes"),
         F.sum("n_occurrences").alias("n_occurrences"),
     )
@@ -3159,11 +3194,10 @@ GROUP BY pub_year
 def bel_pub_year_stats(spark, sf_dir):
     """Publication-year statistics over the real statement/edge table
     (web/api/ebel/v1/bel.py:1505-1512 analog)."""
-    from . import parse as P
-    st = P.statements_table(_bel_oracle_parsed(spark).filter("ok"))
     return (
-        st.filter(F.col("citation_pub_date").isNotNull()
-                  & F.col("relation").isNotNull() & ~F.col("nested"))
+        _kg_statements(spark)
+        .filter(F.col("citation_pub_date").isNotNull()
+                & F.col("relation").isNotNull() & ~F.col("nested"))
         .groupBy(F.substring("citation_pub_date", 1, 4).alias("pub_year"))
         .agg(F.count(F.lit(1)).alias("n_statements"),
              F.countDistinct("edge_key").alias("n_edges"))
@@ -3186,10 +3220,9 @@ def bel_annotation_stats(spark, sf_dir):
     """Annotation-value statistics (MeSH-statistics analog,
     web/api/ebel/v1/bel.py:579-596): explode one annotation key over the
     real statement table."""
-    from . import parse as P
-    st = P.statements_table(_bel_oracle_parsed(spark).filter("ok"))
     return (
-        st.filter(F.col("relation").isNotNull() & ~F.col("nested"))
+        _kg_statements(spark)
+        .filter(F.col("relation").isNotNull() & ~F.col("nested"))
         .select("file_sha",
                 F.explode(F.col("annotation")["Cells"]).alias("cell"))
         .groupBy("cell")
@@ -3222,10 +3255,8 @@ def bel_node_degree(spark, sf_dir):
     from OrientDB (web/api/ebel/v1/bel.py:982-1144 path queries walk
     them); here it is two map-side-combined aggregations and a top-k —
     no global sort, no driver loop."""
-    from . import parse as P
-    st = P.statements_table(_bel_oracle_parsed(spark).filter("ok"))
     e = (
-        st.filter(F.col("edge_key").isNotNull() & ~F.col("nested"))
+        _kg_edge_statements(spark)
         .select("edge_key", "subject_bel", "object_bel")
         .dropDuplicates(["edge_key"])
     )
@@ -3331,15 +3362,7 @@ def bel_personalized_pagerank(spark, sf_dir):
     both re-concentrate on the seed distribution).  The oracle unrolls
     the same fixed point into chained CTEs, so the iterative op gets a
     full-value check like uniform bel_pagerank."""
-    from . import graph as G
-    from . import parse as P
-    st = P.statements_table(_bel_oracle_parsed(spark).filter("ok"))
-    e = (
-        st.filter(F.col("edge_key").isNotNull() & ~F.col("nested"))
-        .select(F.col("subject_bel").alias("u"),
-                F.col("object_bel").alias("v"))
-        .distinct()
-    )
+    e = _kg_uv_edges(spark)
     seeds = (
         e.select(F.col("u").alias("bel"))
         .union(e.select(F.col("v").alias("bel")))
@@ -3357,16 +3380,7 @@ def bel_pagerank(spark, sf_dir):
     DataFrame rounds (graph.pagerank).  The oracle is the same fixed-point
     unrolled into 10 chained SQL CTEs, so even the iterative op gets a
     full-value check."""
-    from . import graph as G
-    from . import parse as P
-    st = P.statements_table(_bel_oracle_parsed(spark).filter("ok"))
-    e = (
-        st.filter(F.col("edge_key").isNotNull() & ~F.col("nested"))
-        .select(F.col("subject_bel").alias("u"),
-                F.col("object_bel").alias("v"))
-        .distinct()
-    )
-    pr = G.pagerank(e, damping=0.85, iters=10)
+    pr = G.pagerank(_kg_uv_edges(spark), damping=0.85, iters=10)
     return pr.select("bel", F.round("rank", 6).alias("rank"))
 
 
@@ -3397,16 +3411,7 @@ def bel_triangle_counts(spark, sf_dir):
     is bounded by O(sqrt(m)) per node on power-law graphs; the oracle
     enumerates each triangle once via the simple a<b<c three-way join —
     different physical scheme, identical per-node counts."""
-    from . import graph as G
-    from . import parse as P
-    st = P.statements_table(_bel_oracle_parsed(spark).filter("ok"))
-    e = (
-        st.filter(F.col("edge_key").isNotNull() & ~F.col("nested"))
-        .select(F.col("subject_bel").alias("u"),
-                F.col("object_bel").alias("v"))
-        .distinct()
-    )
-    return G.triangle_counts(e)
+    return G.triangle_counts(_kg_uv_edges(spark))
 
 
 @q("bel_edge_support", f"""
@@ -3436,16 +3441,7 @@ def bel_edge_support(spark, sf_dir):
     enumeration as bel_triangle_counts (graph.edge_support) but crediting
     each triangle's three EDGES; the oracle enumerates triangles once via
     the a<b<c three-way join and unions the three edge credits."""
-    from . import graph as G
-    from . import parse as P
-    st = P.statements_table(_bel_oracle_parsed(spark).filter("ok"))
-    e = (
-        st.filter(F.col("edge_key").isNotNull() & ~F.col("nested"))
-        .select(F.col("subject_bel").alias("u"),
-                F.col("object_bel").alias("v"))
-        .distinct()
-    )
-    return G.edge_support(e)
+    return G.edge_support(_kg_uv_edges(spark))
 
 
 def _ktruss_oracle_sql(k: int = 3, rounds: int = 3,
@@ -3504,16 +3500,7 @@ def bel_ktruss(spark, sf_dir):
     enumeration, edges below support k-2 dropped synchronously.  The
     oracle unrolls the identical rounds into chained CTEs, so the
     iterative op gets a full-value check like bel_kcore/bel_pagerank."""
-    from . import graph as G
-    from . import parse as P
-    st = P.statements_table(_bel_oracle_parsed(spark).filter("ok"))
-    e = (
-        st.filter(F.col("edge_key").isNotNull() & ~F.col("nested"))
-        .select(F.col("subject_bel").alias("u"),
-                F.col("object_bel").alias("v"))
-        .distinct()
-    )
-    return G.ktruss_peel(e, k=3, rounds=2)
+    return G.ktruss_peel(_kg_uv_edges(spark), k=3, rounds=2)
 
 
 @q("bel_ktruss_fixpoint", _ktruss_oracle_sql(k=4, rounds=6,
@@ -3527,16 +3514,7 @@ def bel_ktruss_fixpoint(spark, sf_dir):
     the detected fixpoint IS the deep unrolling's answer, and the
     constant-true converged column checks the detector terminated by
     stability, not by the bound."""
-    from . import graph as G
-    from . import parse as P
-    st = P.statements_table(_bel_oracle_parsed(spark).filter("ok"))
-    e = (
-        st.filter(F.col("edge_key").isNotNull() & ~F.col("nested"))
-        .select(F.col("subject_bel").alias("u"),
-                F.col("object_bel").alias("v"))
-        .distinct()
-    )
-    return G.ktruss_peel(e, k=4, rounds=None, max_rounds=8)
+    return G.ktruss_peel(_kg_uv_edges(spark), k=4, rounds=None, max_rounds=8)
 
 
 _BIO_SQL = ("'abundance','bio_object','complex','gene','genetic_flow',"
@@ -3606,17 +3584,9 @@ def bel_reactome_pathways(spark, sf_dir):
     same relational steps in SQL over dim projections that bake in the
     two driver-side determinism rules (min-by-symbol prev map,
     min-accession per (taxid, symbol))."""
-    from . import graph as G
-    from . import link as L
-    from . import parse as P
-    from .namespaces import build_dimensions, dims_to_spark
     from .oracle_data import ensure_link_tables
     base = ensure_link_tables()
-    parsed = _bel_oracle_parsed(spark)
-    nodes = G.materialize_nodes(P.nodes_table(parsed.filter("ok")))
-    dims = dims_to_spark(spark, build_dimensions())
-    linked = L.link_uniprot(L.link_hgnc(nodes, dims["hgnc"]),
-                            dims["uniprot"])
+    linked = _kg_linked_nodes(spark)
     reactome = spark.read.parquet(f"{base}/reactome")
     return L.link_reactome(linked, reactome)
 
@@ -3637,17 +3607,9 @@ def bel_intact_edges(spark, sf_dir):
     nodes of the KG become edges carrying the interaction metadata —
     here a single double equi-join of the interaction dim against the
     linked node table, no per-row loop, no network round-trips."""
-    from . import graph as G
-    from . import link as L
-    from . import parse as P
-    from .namespaces import build_dimensions, dims_to_spark
     from .oracle_data import ensure_link_tables
     base = ensure_link_tables()
-    parsed = _bel_oracle_parsed(spark)
-    nodes = G.materialize_nodes(P.nodes_table(parsed.filter("ok")))
-    dims = dims_to_spark(spark, build_dimensions())
-    linked = L.link_uniprot(L.link_hgnc(nodes, dims["hgnc"]),
-                            dims["uniprot"])
+    linked = _kg_linked_nodes(spark)
     intact = spark.read.parquet(f"{base}/intact")
     return L.link_intact(linked, intact)
 
@@ -3672,15 +3634,7 @@ def bel_pair_pmi(spark, sf_dir):
     ranking (graph.cooccurrence_pmi).  Three map-side-combinable counts +
     equi-joins on broadcastable marginal tables; the statement-level
     counts (not distinct) weight repeated assertions."""
-    from . import graph as G
-    from . import parse as P
-    st = P.statements_table(_bel_oracle_parsed(spark).filter("ok"))
-    s = (
-        st.filter(F.col("edge_key").isNotNull() & ~F.col("nested"))
-        .select(F.col("subject_bel").alias("u"),
-                F.col("object_bel").alias("v"))
-    )
-    return G.cooccurrence_pmi(s).select(
+    return G.cooccurrence_pmi(_kg_pairs(spark)).select(
         "u", "v", "n_uv", F.round("pmi", 6).alias("pmi"))
 
 
@@ -3719,15 +3673,7 @@ def bel_bfs_depths(spark, sf_dir):
     to depth 6 — level-synchronous frontier expansion as DataFrame
     rounds (graph.bfs_depths), the Pregel pattern Spark GraphX uses.
     The oracle unrolls the same fixpoint into chained SQL CTEs."""
-    from . import graph as G
-    from . import parse as P
-    st = P.statements_table(_bel_oracle_parsed(spark).filter("ok"))
-    e = (
-        st.filter(F.col("edge_key").isNotNull() & ~F.col("nested"))
-        .select(F.col("subject_bel").alias("u"),
-                F.col("object_bel").alias("v"))
-        .distinct()
-    )
+    e = _kg_uv_edges(spark)
     deg = (
         e.select(F.col("u").alias("bel"))
         .unionAll(e.select(F.col("v").alias("bel")))
@@ -3781,11 +3727,8 @@ def bel_sssp_causal(spark, sf_dir):
     evidence-weighted proximity query plain BFS cannot express.  Six
     synchronous Bellman-Ford rounds, exact integer min throughout; the
     oracle unrolls the identical rounds into chained min-groupBy CTEs."""
-    from . import graph as G
-    from . import parse as P
-    st = P.statements_table(_bel_oracle_parsed(spark).filter("ok"))
     base = (
-        st.filter(F.col("edge_key").isNotNull() & ~F.col("nested"))
+        _kg_edge_statements(spark)
         .select(F.col("subject_bel").alias("u"),
                 F.col("object_bel").alias("v"),
                 F.when(F.col("relation_category") == "causal", F.lit(1))
@@ -3890,16 +3833,7 @@ def bel_hits(spark, sf_dir):
     targets (hubs) and which ARE the targets (authorities).  The oracle
     unrolls the identical fixed point into chained SQL CTEs, full-value
     checked at 6 decimals like pagerank."""
-    from . import graph as G
-    from . import parse as P
-    st = P.statements_table(_bel_oracle_parsed(spark).filter("ok"))
-    e = (
-        st.filter(F.col("edge_key").isNotNull() & ~F.col("nested"))
-        .select(F.col("subject_bel").alias("u"),
-                F.col("object_bel").alias("v"))
-        .distinct()
-    )
-    h = G.hits(e, iters=5)
+    h = G.hits(_kg_uv_edges(spark), iters=5)
     return h.select("bel", F.round("hub", 6).alias("hub"),
                     F.round("auth", 6).alias("auth"))
 
@@ -3913,17 +3847,9 @@ def bel_random_walks(spark, sf_dir):
     transition choice from the driver-side xxhash64 helper table and
     replays the walks as chained SQL joins — a full-value check of each
     hop of each walk."""
-    from . import graph as G
-    from . import parse as P
     from .oracle_data import WALK_LEN, WALKS_PER_NODE, ensure_walk_tables
     ensure_walk_tables()
-    st = P.statements_table(_bel_oracle_parsed(spark).filter("ok"))
-    e = (
-        st.filter(F.col("edge_key").isNotNull() & ~F.col("nested"))
-        .select(F.col("subject_bel").alias("u"),
-                F.col("object_bel").alias("v"))
-        .distinct()
-    )
+    e = _kg_uv_edges(spark)
     return G.random_walks(e, walks_per_node=WALKS_PER_NODE,
                           walk_len=WALK_LEN)
 
@@ -3942,17 +3868,9 @@ def bel_walk_pairs(spark, sf_dir):
     out at most (walk_len+1)^2 rows per walk and partitions on
     (start, walk), so it stays bounded at any corpus size.  The oracle
     replays the walks AND the pair window in SQL."""
-    from . import graph as G
-    from . import parse as P
     from .oracle_data import WALK_LEN, WALKS_PER_NODE, ensure_walk_tables
     ensure_walk_tables()
-    st = P.statements_table(_bel_oracle_parsed(spark).filter("ok"))
-    e = (
-        st.filter(F.col("edge_key").isNotNull() & ~F.col("nested"))
-        .select(F.col("subject_bel").alias("u"),
-                F.col("object_bel").alias("v"))
-        .distinct()
-    )
+    e = _kg_uv_edges(spark)
     w = G.random_walks(e, walks_per_node=WALKS_PER_NODE,
                        walk_len=WALK_LEN)
     return G.skipgram_pairs(w, window=2)
@@ -3993,16 +3911,7 @@ def bel_kcore(spark, sf_dir):
     low-degree fringe removal before community/centrality analyses.
     The oracle unrolls the same synchronous peeling into chained
     MATERIALIZED CTEs."""
-    from . import graph as G
-    from . import parse as P
-    st = P.statements_table(_bel_oracle_parsed(spark).filter("ok"))
-    e = (
-        st.filter(F.col("edge_key").isNotNull() & ~F.col("nested"))
-        .select(F.col("subject_bel").alias("u"),
-                F.col("object_bel").alias("v"))
-        .distinct()
-    )
-    return G.kcore_peel(e, k=2, rounds=6)
+    return G.kcore_peel(_kg_uv_edges(spark), k=2, rounds=6)
 
 
 @q("bel_components", f"""
@@ -4042,16 +3951,7 @@ def bel_components(spark, sf_dir):
     rounds — the 10^12-node-safe formulation); the oracle computes the
     exact transitive closure with a recursive CTE, which stays tractable
     precisely because the hubs are gone."""
-    from . import graph as G
-    from . import parse as P
-    st = P.statements_table(_bel_oracle_parsed(spark).filter("ok"))
-    e = (
-        st.filter(F.col("edge_key").isNotNull() & ~F.col("nested"))
-        .select(F.col("subject_bel").alias("u"),
-                F.col("object_bel").alias("v"))
-        .distinct()
-    )
-    und = G.undirected_edges(e, "u", "v")
+    und = G.undirected_edges(_kg_uv_edges(spark), "u", "v")
     deg = (
         und.select(F.col("a").alias("bel"))
         .unionAll(und.select(F.col("b").alias("bel")))
@@ -4107,11 +4007,8 @@ def bel_negative_samples(spark, sf_dir):
     bucket, true-object collisions filtered.  No global entity index
     (the single-partition row_number trap); one equi-join with
     ~N/buckets fan-out per negative."""
-    from . import graph as G
-    from . import parse as P
-    st = P.statements_table(_bel_oracle_parsed(spark).filter("ok"))
     pos = (
-        st.filter(F.col("edge_key").isNotNull() & ~F.col("nested"))
+        _kg_edge_statements(spark)
         .select("edge_key", "subject_bel", "relation", "object_bel")
         .distinct()
     )
@@ -4156,16 +4053,7 @@ def bel_communities_lpa(spark, sf_dir):
     KG construction.  The oracle unrolls the same rounds into chained
     MATERIALIZED CTEs with an identical window tie-break, so the
     iterative algorithm gets a full-value check."""
-    from . import graph as G
-    from . import parse as P
-    st = P.statements_table(_bel_oracle_parsed(spark).filter("ok"))
-    e = (
-        st.filter(F.col("edge_key").isNotNull() & ~F.col("nested"))
-        .select(F.col("subject_bel").alias("u"),
-                F.col("object_bel").alias("v"))
-        .distinct()
-    )
-    return G.label_propagation(e, iters=5).select(
+    return G.label_propagation(_kg_uv_edges(spark), iters=5).select(
         "bel", F.col("label").alias("community"))
 
 
@@ -4204,16 +4092,7 @@ def bel_neighbor_jaccard(spark, sf_dir):
     (graph.neighbor_jaccard), with super-hub neighbors (degree > 64)
     excluded from both sides as the skew cap.  Integer set sizes and a
     single double division keep the score hash-exact vs the SQL twin."""
-    from . import graph as G
-    from . import parse as P
-    st = P.statements_table(_bel_oracle_parsed(spark).filter("ok"))
-    e = (
-        st.filter(F.col("edge_key").isNotNull() & ~F.col("nested"))
-        .select(F.col("subject_bel").alias("u"),
-                F.col("object_bel").alias("v"))
-        .distinct()
-    )
-    return G.neighbor_jaccard(e, threshold=0.5, max_hub=64)
+    return G.neighbor_jaccard(_kg_uv_edges(spark), threshold=0.5, max_hub=64)
 
 
 def _aa_oracle_sql(max_hub: int = 64, min_common: int = 2) -> str:
@@ -4260,16 +4139,7 @@ def bel_adamic_adar(spark, sf_dir):
     (graph.adamic_adar).  Contributions ride as driver-computed
     fixed-point longs on BOTH engines, so the distributed sum is exact
     and order-independent."""
-    from . import graph as G
-    from . import parse as P
-    st = P.statements_table(_bel_oracle_parsed(spark).filter("ok"))
-    e = (
-        st.filter(F.col("edge_key").isNotNull() & ~F.col("nested"))
-        .select(F.col("subject_bel").alias("u"),
-                F.col("object_bel").alias("v"))
-        .distinct()
-    )
-    return G.adamic_adar(e, max_hub=64, min_common=2)
+    return G.adamic_adar(_kg_uv_edges(spark), max_hub=64, min_common=2)
 
 
 @q("bel_ambiguity_warnings", f"""
@@ -4400,8 +4270,7 @@ def bel_triples(spark, sf_dir):
     """Flagship (subj, pred, obj) emission: distributed parse + statement
     explode vs the pandas-parsed statement projection (parser.py:321,
     importer.py:243-305 equivalents)."""
-    from . import parse as P
-    st = P.statements_table(_bel_oracle_parsed(spark).filter("ok"))
+    st = _kg_statements(spark)
     return st.filter(F.col("relation").isNotNull() & ~F.col("nested")).select(
         "file_sha", "stmt_idx", "subject_bel", "relation", "object_bel",
         "citation_type", "citation_ref", "evidence", "pmid",
@@ -4425,12 +4294,9 @@ def bel_nodes(spark, sf_dir):
     (graph.materialize_nodes) vs SQL grouping over the pandas-parsed node
     rows.  sha256-based node_id is recomputed independently on both sides
     (importer.py:423 rid-cache replacement)."""
-    from . import graph as G
-    from . import parse as P
-    nodes = G.materialize_nodes(
-        P.nodes_table(_bel_oracle_parsed(spark).filter("ok")))
-    return nodes.select("node_id", "node_class", "bel", "namespace", "name",
-                        "pure", "n_occurrences")
+    return _kg_nodes(spark).select(
+        "node_id", "node_class", "bel", "namespace", "name", "pure",
+        "n_occurrences")
 
 
 @q("bel_validation_errors", f"""
@@ -4448,7 +4314,6 @@ def bel_validation_errors(spark, sf_dir):
     four semantic families, vs the same union in SQL (validate.py:252-354
     equivalent).  Semantic errors only apply to parseable files, mirroring
     the reference's validate-then-check flow."""
-    from . import parse as P
     from . import validate as V
     from .namespaces import build_dimensions, dims_to_spark
     parsed = _bel_oracle_parsed(spark)
@@ -4589,14 +4454,8 @@ def bel_paths(spark, sf_dir):
     hop, last != first, lengths 1..2.  The oracle re-derives the same
     unrolled join DAG in SQL; caps are disabled here (refuse-past-caps
     semantics are pinned by pytest)."""
-    from . import graph as G
-    from . import parse as P
-    parsed = _bel_oracle_parsed(spark)
-    st = P.statements_table(parsed.filter("ok"))
-    edges = G.materialize_edges(st)
-    nodes = G.materialize_nodes(P.nodes_table(parsed.filter("ok")))
     return G.path_query(
-        edges, nodes,
+        _kg_edges(spark), _kg_nodes(spark),
         min_len=1, max_len=2,
         start={"node_class": "protein", "namespace": "HGNC"},
         end={"node_class": "bio_object"},
@@ -4628,13 +4487,8 @@ def bel_match(spark, sf_dir):
     {where:(...)})``) over the REAL nodes + edges tables: HGNC proteins
     touching at least one `increases` edge published 2015+.  The oracle
     re-derives the touched-node set and the node predicate in SQL."""
-    from . import graph as G
-    from . import parse as P
-    parsed = _bel_oracle_parsed(spark)
-    edges = G.materialize_edges(P.statements_table(parsed.filter("ok")))
-    nodes = G.materialize_nodes(P.nodes_table(parsed.filter("ok")))
     return G.match_context(
-        nodes, edges,
+        _kg_nodes(spark), _kg_edges(spark),
         node_class="protein",
         node_where=F.col("namespace") == "HGNC",
         edge_relations=["increases"],
@@ -4777,18 +4631,10 @@ def bel_node2vec_walks(spark, sf_dir):
     2-path domain — the BFS/DFS-interpolating upgrade of
     bel_random_walks.  The oracle unrolls the same min-selection joins
     over the driver-computed biased keys."""
-    from . import graph as G
-    from . import parse as P
     from .oracle_data import (N2V_MAX_HUB, N2V_P, N2V_Q, WALK_LEN,
                               WALKS_PER_NODE, ensure_node2vec_tables)
     ensure_node2vec_tables()
-    st = P.statements_table(_bel_oracle_parsed(spark).filter("ok"))
-    e = (
-        st.filter(F.col("edge_key").isNotNull() & ~F.col("nested"))
-        .select(F.col("subject_bel").alias("u"),
-                F.col("object_bel").alias("v"))
-        .distinct()
-    )
+    e = _kg_uv_edges(spark)
     return G.node2vec_walks(e, walks_per_node=WALKS_PER_NODE,
                             walk_len=WALK_LEN, p=N2V_P, q=N2V_Q,
                             max_hub=N2V_MAX_HUB)
@@ -4807,18 +4653,10 @@ def bel_node2vec_pairs(spark, sf_dir):
     the training examples the p/q-tuned embedding job consumes; same
     bounded per-walk self-join as bel_walk_pairs over the biased
     walks."""
-    from . import graph as G
-    from . import parse as P
     from .oracle_data import (N2V_MAX_HUB, N2V_P, N2V_Q, WALK_LEN,
                               WALKS_PER_NODE, ensure_node2vec_tables)
     ensure_node2vec_tables()
-    st = P.statements_table(_bel_oracle_parsed(spark).filter("ok"))
-    e = (
-        st.filter(F.col("edge_key").isNotNull() & ~F.col("nested"))
-        .select(F.col("subject_bel").alias("u"),
-                F.col("object_bel").alias("v"))
-        .distinct()
-    )
+    e = _kg_uv_edges(spark)
     w = G.node2vec_walks(e, walks_per_node=WALKS_PER_NODE,
                          walk_len=WALK_LEN, p=N2V_P, q=N2V_Q,
                          max_hub=N2V_MAX_HUB)
@@ -4863,16 +4701,7 @@ def bel_clustering_coefficient(spark, sf_dir):
     transitivity; graph.clustering_coefficient) — degree-ordered
     compact-forward triangle counts joined against the undirected
     degree, nodes of degree < 2 excluded on both engines."""
-    from . import graph as G
-    from . import parse as P
-    st = P.statements_table(_bel_oracle_parsed(spark).filter("ok"))
-    e = (
-        st.filter(F.col("edge_key").isNotNull() & ~F.col("nested"))
-        .select(F.col("subject_bel").alias("u"),
-                F.col("object_bel").alias("v"))
-        .distinct()
-    )
-    return G.clustering_coefficient(e)
+    return G.clustering_coefficient(_kg_uv_edges(spark))
 
 
 @q("bel_schema_graph", f"""
@@ -4889,11 +4718,7 @@ def bel_schema_graph(spark, sf_dir):
     graph.schema_graph): (subject_class, relation, object_class) with
     statement and distinct-entity counts — one map-side-combinable
     aggregation whose output is class-vocab² x relations sized."""
-    from . import graph as G
-    from . import parse as P
-    st = P.statements_table(_bel_oracle_parsed(spark).filter("ok"))
-    return G.schema_graph(
-        st.filter(F.col("edge_key").isNotNull() & ~F.col("nested")))
+    return G.schema_graph(_kg_edge_statements(spark))
 
 
 # ---------------------------------------------------------------------------
@@ -5001,16 +4826,7 @@ def bel_link_prediction_eval(spark, sf_dir):
     train on 9/10 of the undirected edges, rank all AA candidates, and
     report recovery rank per held-out edge — the acceptance harness a
     KG-completion loop runs before promoting proposed edges."""
-    from . import graph as G
-    from . import parse as P
-    st = P.statements_table(_bel_oracle_parsed(spark).filter("ok"))
-    e = (
-        st.filter(F.col("edge_key").isNotNull() & ~F.col("nested"))
-        .select(F.col("subject_bel").alias("u"),
-                F.col("object_bel").alias("v"))
-        .distinct()
-    )
-    return G.link_prediction_eval(e, k=20)
+    return G.link_prediction_eval(_kg_uv_edges(spark), k=20)
 
 
 # ---------------------------------------------------------------------------
@@ -5045,7 +4861,6 @@ def bel_node_merge_map(spark, sf_dir):
     canonical representative (most frequent form, ties to smallest
     bel).  One count agg + one per-group max-struct election — the
     reference's one-lookup-per-node resolution as set algebra."""
-    from . import graph as G
     base = _ensure_oracle()
     nodes_raw = spark.read.parquet(f"{base}/nodes_raw")
     return G.node_merge_map(nodes_raw)
@@ -5092,15 +4907,9 @@ def bel_horn_rules(spark, sf_dir):
     — the relation-inference pass of KG completion.  One fact dedup,
     one self-join on the join variable, relation-vocabulary-sized
     aggregations."""
-    from . import graph as G
-    from . import parse as P
-    st = P.statements_table(_bel_oracle_parsed(spark).filter("ok"))
-    s = (
-        st.filter(F.col("edge_key").isNotNull() & ~F.col("nested"))
-        .select(F.col("subject_bel").alias("u"),
-                F.col("relation").alias("r"),
-                F.col("object_bel").alias("v"))
-    )
+    s = _kg_edge_statements(spark).select(
+        F.col("subject_bel").alias("u"), F.col("relation").alias("r"),
+        F.col("object_bel").alias("v"))
     return G.mine_horn_rules(s, min_support=2, min_conf=0.05)
 
 
@@ -5145,15 +4954,9 @@ def bel_rule_proposals(spark, sf_dir):
     supporting rule picked by a deterministic max-struct.  The oracle
     re-mines the rules in SQL and re-derives the proposals with a
     NOT EXISTS anti-join + row_number arg-max."""
-    from . import graph as G
-    from . import parse as P
-    st = P.statements_table(_bel_oracle_parsed(spark).filter("ok"))
-    s = (
-        st.filter(F.col("edge_key").isNotNull() & ~F.col("nested"))
-        .select(F.col("subject_bel").alias("u"),
-                F.col("relation").alias("r"),
-                F.col("object_bel").alias("v"))
-    )
+    s = _kg_edge_statements(spark).select(
+        F.col("subject_bel").alias("u"), F.col("relation").alias("r"),
+        F.col("object_bel").alias("v"))
     rules = G.mine_horn_rules(s, min_support=2, min_conf=0.05)
     return G.apply_horn_rules(s, rules)
 
@@ -5199,15 +5002,7 @@ def bel_feedback_edges(spark, sf_dir):
     reasoner must treat specially.  Bounded-hop pair closure with
     per-level first-visit anti-joins; the oracle unrolls the identical
     levels into chained CTEs."""
-    from . import graph as G
-    from . import parse as P
-    st = P.statements_table(_bel_oracle_parsed(spark).filter("ok"))
-    e = (
-        st.filter(F.col("edge_key").isNotNull() & ~F.col("nested"))
-        .select(F.col("subject_bel").alias("u"),
-                F.col("object_bel").alias("v"))
-    )
-    return G.cycle_edges(e, max_len=4)
+    return G.cycle_edges(_kg_pairs(spark), max_len=4)
 
 
 @q("bel_edge_first_year", f"""
@@ -5223,10 +5018,7 @@ def bel_edge_first_year(spark, sf_dir):
     (graph.edge_first_assertion) — when the KG learned each fact, the
     per-triple refinement of bel_pub_year_stats.  One min/count
     aggregation, map-side combined."""
-    from . import graph as G
-    from . import parse as P
-    st = P.statements_table(_bel_oracle_parsed(spark).filter("ok"))
-    return G.edge_first_assertion(st)
+    return G.edge_first_assertion(_kg_statements(spark))
 
 
 @q("bel_kg_diff", f"""
@@ -5253,15 +5045,9 @@ def bel_kg_diff(spark, sf_dir):
     which triples the delta adds / removes / keeps.  One deduplicated
     full-outer join on the edge key, the primitive behind resumable
     MERGE lineage verification."""
-    from . import graph as G
-    from . import parse as P
-    st = P.statements_table(_bel_oracle_parsed(spark).filter("ok"))
-    s = (
-        st.filter(F.col("edge_key").isNotNull() & ~F.col("nested"))
-        .select(F.col("subject_bel").alias("u"),
-                F.col("relation").alias("r"),
-                F.col("object_bel").alias("v"), "pmid")
-    )
+    s = _kg_edge_statements(spark).select(
+        F.col("subject_bel").alias("u"), F.col("relation").alias("r"),
+        F.col("object_bel").alias("v"), "pmid")
     return G.kg_diff(s.filter(F.col("pmid") % 2 == 0), s)
 
 

@@ -7,6 +7,8 @@ instead of string-normalizing them away."""
 import importlib.util
 import os
 
+import pytest
+
 _spec = importlib.util.spec_from_file_location(
     "check_contract",
     os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -77,3 +79,35 @@ class TestScaleReplicaGenerator:
             assert t0.join(t1, "t", "left_semi").count() == 0
         finally:
             shutil.rmtree(d1, ignore_errors=True)
+
+
+class TestBelQueryTwins:
+    """One bel_* query per shared oracle-KG derivation in
+    ebel_spark/queries.py (statements, edge statements, (u, v) edges,
+    materialized edges, nodes, linked nodes) against its DuckDB twin,
+    compared the way scripts/check_contract.py compares them."""
+
+    @pytest.mark.parametrize("name", [
+        "bel_triples", "bel_pair_pmi", "bel_kcore", "bel_edge_dedup_counts",
+        "bel_nodes", "bel_reactome_pathways"])
+    def test_query_matches_duckdb_twin(self, spark, name):
+        import duckdb
+
+        from ebel_spark.ops.dedup import release_pins
+        from ebel_spark.queries import QUERIES
+
+        fn, sql = QUERIES[name]
+        release_pins()
+        # the bel_* queries read the oracle corpus, not the sf tables
+        sdf = fn(spark, None)
+        srows = [tuple(r) for r in sdf.collect()]
+        con = duckdb.connect()
+        res = con.sql(sql)
+        ocols, otypes = res.columns, [str(t) for t in res.types]
+        orows = res.fetchall()
+        assert sorted(c.lower() for c in sdf.columns) == \
+            sorted(c.lower() for c in ocols)
+        assert cc.dtype_mismatches(sdf.columns, [t for _, t in sdf.dtypes],
+                                   ocols, otypes) == []
+        assert srows
+        assert cc.norm_rows(sdf.columns, srows) == cc.norm_rows(ocols, orows)

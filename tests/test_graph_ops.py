@@ -303,6 +303,11 @@ class TestPathQuery:
             G.path_query(chain, min_len=1, max_len=2,
                          relations=["increases", "decreases"],
                          max_subgraph_edges=2)
+        # a zero budget is a budget, not "no guard": any non-empty
+        # subgraph is refused
+        with pytest.raises(G.PathExplosionError, match="pre-guard"):
+            G.path_query(chain, min_len=1, max_len=2,
+                         max_subgraph_edges=0)
         # at or under the budget: identical results to no pre-guard
         a = sorted(tuple(r) for r in G.path_query(
             chain, min_len=1, max_len=2,
@@ -558,6 +563,38 @@ class TestKTruss:
         # round 1 drops the support-1 edges but (b,c) still pending ->
         # not converged at the bound
         assert rows and not rows[0]["converged"]
+
+    def test_fixpoint_last_drop_at_max_rounds_is_unconverged(self, spark):
+        # the test_fixpoint_equals_true_truss graph drops edges in rounds
+        # 1 and 2 and is stable from round 3: converged means a round
+        # within max_rounds removed nothing, so a bound of exactly 2
+        # reports false although the surviving edges are already final
+        nodes = ["a", "b", "c", "d"]
+        k4 = [(x, y) for x in nodes for y in nodes if x < y]
+        e = _edges(spark, k4 + [("c", "e"), ("d", "e"),
+                                ("d", "f"), ("e", "f")])
+        at_bound = G.ktruss_peel(e, k=4, rounds=None, max_rounds=2).collect()
+        assert {(r["a"], r["b"]) for r in at_bound} == set(k4)
+        assert not any(r["converged"] for r in at_bound)
+        past = G.ktruss_peel(e, k=4, rounds=None, max_rounds=3).collect()
+        assert {(r["a"], r["b"]) for r in past} == set(k4)
+        assert all(r["converged"] for r in past)
+
+
+class TestCycleEdges:
+    @pytest.mark.parametrize("src,dst", [("s", "t"), ("v", "w")])
+    def test_non_default_column_names(self, spark, src, dst):
+        # the self-loop filter must read the aliased u/v columns, not
+        # src/dst: with src="v", dst="w", F.col(src) resolved to the
+        # ALIASED v (= w) and the filter became w != w, dropping every
+        # edge
+        e = spark.createDataFrame(
+            [("a", "b"), ("b", "a"), ("b", "c"), ("c", "c")],
+            f"{src} string, {dst} string")
+        got = {(r.u, r.v): r.cycle_len
+               for r in G.cycle_edges(e, max_len=3, src=src,
+                                      dst=dst).collect()}
+        assert got == {("a", "b"): 2, ("b", "a"): 2}
 
 
 class TestSsspRelax:
