@@ -97,8 +97,7 @@ def cut_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
 # nodes
 # ---------------------------------------------------------------------------
 
-def materialize_nodes(nodes_tbl: DataFrame,
-                      modifiers_materialized: bool = False) -> DataFrame:
+def materialize_nodes(nodes_tbl: DataFrame) -> DataFrame:
     """Dedup per-file node rows into the global node table.
 
     Shuffle key = (node_class, bel); hot nodes (p(HGNC:"TNF") in every file)
@@ -106,11 +105,10 @@ def materialize_nodes(nodes_tbl: DataFrame,
     shuffle in volume.
 
     Pure tagging mirrors the reference exactly (biodbs/bel.py:489-494: "no
-    outgoing has__{fragment,variant,pmod,location,gmod} edges"): when
-    modifier nodes are NOT materialized (the reference true_values behavior)
-    no such edges exist, so every node of a pure-eligible class is pure —
-    including modified terms like p(HGNC:"IL2",pmod(Ph)).  Only with
-    ``modifiers_materialized`` does ``has_modifiers`` gate purity.
+    outgoing has__{fragment,variant,pmod,location,gmod} edges"): modifier
+    nodes are never materialized (the reference true_values behavior), so
+    no such edges exist and every node of a pure-eligible class is pure —
+    including modified terms like p(HGNC:"IL2",pmod(Ph)).
     """
     deduped = (
         nodes_tbl.groupBy("node_class", "bel")
@@ -123,13 +121,11 @@ def materialize_nodes(nodes_tbl: DataFrame,
         )
     )
     pure_classes = F.array(*[F.lit(c) for c in sorted(PURE_CLASSES)])
-    is_pure = F.array_contains(pure_classes, F.col("node_class"))
-    if modifiers_materialized:
-        is_pure = is_pure & ~F.col("has_modifiers")
     return (
         deduped
         .withColumn("node_id", node_id_col(F.col("node_class"), F.col("bel")))
-        .withColumn("pure", is_pure)
+        .withColumn("pure",
+                    F.array_contains(pure_classes, F.col("node_class")))
         .select(
             "node_id", "node_class", "bel", "namespace", "name", "props",
             "has_modifiers", "pure", "n_occurrences",

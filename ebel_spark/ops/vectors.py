@@ -155,22 +155,9 @@ def hyperplanes(dim: int, nbits: int, seed: int = 42) -> list[list[float]]:
     return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(nbits)]
 
 
-def lsh_bucket(vec_col, planes: list[list[float]]):
-    """Sign-bit bucket key from LITERAL hyperplanes (interpreted HOF dot;
-    kept for unknown-dim API compatibility).  Hot paths use
-    lsh_bucket_col over an attach_model column instead."""
-    bucket = F.lit(0).cast("long")
-    for i, p in enumerate(planes):
-        lit_plane = F.array(*[F.lit(float(x)) for x in p])
-        bit = F.when(dot(vec_col, lit_plane) > 0,
-                     F.shiftleft(F.lit(1).cast("long"), i)).otherwise(F.lit(0))
-        bucket = bucket.bitwiseOR(bit)
-    return bucket
-
-
 def lsh_bucket_col(vec_col, pmat_col, nbits: int, dim: int):
     """Sign-bit bucket key from a model-matrix COLUMN (attach_model):
-    bit-identical to the literal-plane fold (float element promoted to
+    bit-identical to a fold over literal planes (float element promoted to
     double, double products, left-assoc double sum).
 
     Compact fold form on purpose — bucket keys are computed once per ROW,

@@ -187,7 +187,25 @@ def ensure_walk_tables(base: str = ORACLE_BASE) -> str:
 # entity-linking / pathway-enrichment oracle dims
 # ---------------------------------------------------------------------------
 
-_LINK_MARKER = "_LINK_READY"
+# versioned: a base whose link tables predate uniprot_acc must be rebuilt
+_LINK_MARKER = "_LINK_READY_v2"
+
+
+def uniprot_link_tables(uniprot: pd.DataFrame) -> dict[str, pd.DataFrame]:
+    """The two UniProt dim projections link.link_uniprot resolves against:
+
+    - uniprot_first (taxid, symbol, accession): min accession per
+      (taxid, symbol) — the deterministic "first" for symbol matches
+    - uniprot_acc (accession): every distinct accession of the FULL dim —
+      the UNIPROT-namespace passthrough matches any accession, not only
+      the first one per symbol
+    """
+    first = (uniprot.sort_values("accession")
+             .groupby(["taxid", "gene_symbol"], as_index=False).first()
+             .rename(columns={"gene_symbol": "symbol"})
+             [["taxid", "symbol", "accession"]])
+    return {"uniprot_first": first,
+            "uniprot_acc": uniprot[["accession"]].drop_duplicates()}
 
 
 def ensure_link_tables(base: str = ORACLE_BASE) -> str:
@@ -199,8 +217,7 @@ def ensure_link_tables(base: str = ORACLE_BASE) -> str:
     - hgnc_prev (prev, symbol): prev-symbol correction map, deduped by
       min (symbol, label, location) per prev — link.link_hgnc's
       row_number rule
-    - uniprot_first (taxid, symbol, accession): min accession per
-      (taxid, symbol) — link.link_uniprot's deterministic "first"
+    - uniprot_first, uniprot_acc: see uniprot_link_tables
     - reactome: the synthetic UniProt2Reactome membership file
       (namespaces.build_reactome)
     """
@@ -223,15 +240,10 @@ def ensure_link_tables(base: str = ORACLE_BASE) -> str:
             .sort_values(["prev", "symbol", "label", "location"])
             .groupby("prev", as_index=False).first()[["prev", "symbol"]])
 
-    up = (dims.uniprot.sort_values("accession")
-          .groupby(["taxid", "gene_symbol"], as_index=False).first()
-          .rename(columns={"gene_symbol": "symbol"})
-          [["taxid", "symbol", "accession"]])
-
     tables = {
         "hgnc_sym": dims.hgnc[["symbol"]],
         "hgnc_prev": prev,
-        "uniprot_first": up,
+        **uniprot_link_tables(dims.uniprot),
         "reactome": build_reactome(dims.uniprot),
         "intact": build_intact(dims.uniprot),
     }

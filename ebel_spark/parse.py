@@ -34,7 +34,7 @@ from .schemas import PARSED_SCHEMA
 _PARSE_CHUNK = 64
 
 
-def _make_parser(materialize_modifiers: bool, keep_ir: bool):
+def _make_parser(keep_ir: bool):
     cols = [f.name for f in PARSED_SCHEMA.fields]
 
     def parse_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -46,7 +46,6 @@ def _make_parser(materialize_modifiers: bool, keep_ir: bool):
                     try:
                         r = process_file(
                             row.content or "",
-                            materialize_modifiers=materialize_modifiers,
                             keep_ir=keep_ir,
                             emit_ids=False,  # recomputed JVM-side
                         )
@@ -95,7 +94,6 @@ def with_file_sha(src: DataFrame) -> DataFrame:
 
 def parse_sources(
     src: DataFrame,
-    materialize_modifiers: bool = False,
     keep_ir: bool = False,
     repartition: int | None = None,
 ) -> DataFrame:
@@ -106,7 +104,7 @@ def parse_sources(
         # spread files evenly across cores; parse cost ~ content size, the
         # hash key decorrelates adjacent large files
         src = src.repartition(repartition, "file_sha")
-    fn = _make_parser(materialize_modifiers, keep_ir)
+    fn = _make_parser(keep_ir)
     return src.select(
         "file_sha", "repo", "path", "commit", "lang", "content"
     ).mapInPandas(fn, PARSED_SCHEMA)

@@ -81,20 +81,14 @@ def run_pipeline(
     dims=None,
     mode: str = "force",
     resume: bool = False,
-    materialize_modifiers: bool = False,
-    protein2gene: bool = True,
     enrich: bool = True,
     involved: bool = True,
-    species: bool = True,
     with_hints: bool = True,
-    n_salts: int = 16,
     parse_partitions: int | None = None,
     dedup_source: bool = True,
     run_id: str | None = None,
-    intermediate: str = "parquet",
     repair: bool = False,
     error_report: str | None = None,
-    path_filter: bool = True,
     output_format: str = "parquet",
     catalog: str | None = None,
 ) -> dict:
@@ -132,15 +126,14 @@ def run_pipeline(
         # NOTE this shuffles the full content column — when source
         # uniqueness is an ingest invariant (Iceberg upsert key, or a
         # synthetic corpus), pass dedup_source=False and skip that shuffle.
-        if path_filter:
-            # reference validate.py:237-249 only accepts `%.bel` paths from
-            # a directory; a mixed-language lakehouse table additionally
-            # carries a lang column.  Both predicates push down to the scan
-            # so non-BEL rows never reach the parse UDF.
-            src = src.filter(
-                F.col("path").endswith(".bel")
-                & (F.col("lang").isNull() | (F.col("lang") == "bel"))
-            )
+        # reference validate.py:237-249 only accepts `%.bel` paths from a
+        # directory; a mixed-language lakehouse table additionally carries
+        # a lang column.  Both predicates push down to the scan so non-BEL
+        # rows never reach the parse UDF.
+        src = src.filter(
+            F.col("path").endswith(".bel")
+            & (F.col("lang").isNull() | (F.col("lang") == "bel"))
+        )
         src = P.with_file_sha(src)
         if repair:
             # sha256 invariant stays on the ORIGINAL content (the row
@@ -168,10 +161,7 @@ def run_pipeline(
                 "rows and double-count all downstream tables)")
         else:
             todo = src
-        parsed_new = P.parse_sources(
-            todo, materialize_modifiers=materialize_modifiers,
-            repartition=parse_partitions,
-        )
+        parsed_new = P.parse_sources(todo, repartition=parse_partitions)
         parsed_new.write.mode("append").parquet(parsed_path)
         parsed = spark.read.parquet(parsed_path)
 
@@ -208,26 +198,16 @@ def run_pipeline(
         metrics["n_statements"] = int(lin["n_statements"] or 0)
 
     # ---- 2. derived tables -------------------------------------------------
-    # Multi-consumer intermediates are persisted MEMORY_AND_DISK (spills per
-    # executor on a real cluster) rather than written to parquet: the parsed
-    # table is the durable resume checkpoint, and every downstream stage is
-    # deterministic from it, so intra-run intermediates only need lineage
-    # truncation, not durability.  `intermediate="parquet"` restores the
-    # old write-through behavior for debugging stage outputs.
-    _persisted: list[DataFrame] = []
-
-    if intermediate == "parquet":
-        def _ckpt(df: DataFrame, name: str) -> DataFrame:
-            p = os.path.join(out_dir, "_stage", name)
-            df.write.mode("overwrite").parquet(p)
-            return spark.read.parquet(p)
-    else:
-        from pyspark import StorageLevel
-
-        def _ckpt(df: DataFrame, name: str) -> DataFrame:
-            df = df.persist(StorageLevel.MEMORY_AND_DISK)
-            _persisted.append(df)
-            return df
+    # Multi-consumer intermediates are written to parquet under _stage/ and
+    # read back: the write cuts the lineage, so no consumer re-executes the
+    # parse/aggregate DAG above it (at 100 TB a multi-x recompute of the
+    # most expensive stages).  Persisting them MEMORY_AND_DISK instead
+    # measured ~2x slower on a 4-core host: the edge DAG re-executed inside
+    # the final write, 1576 tasks against 336.
+    def _ckpt(df: DataFrame, name: str) -> DataFrame:
+        p = os.path.join(out_dir, "_stage", name)
+        df.write.mode("overwrite").parquet(p)
+        return spark.read.parquet(p)
 
     statements = P.statements_table(parsed)
     nodes_raw = P.nodes_table(parsed)
@@ -266,45 +246,21 @@ def run_pipeline(
         valid_files = parsed.filter("ok").select("file_sha")
 
     # ---- 5. graph materialization --------------------------------------------
-    # Each super-stage is checkpointed (persist or parquet, see _ckpt) so
-    # downstream stages never re-execute the parse/aggregate DAG — at 100 TB
-    # the alternative is a multi-x recompute of the most expensive stages.
     with stage("materialize"):
         st_valid = statements.join(valid_files, "file_sha", "left_semi")
         with stage("materialize.nodes0"):
             nodes = _ckpt(
                 G.materialize_nodes(
-                    nodes_raw.join(valid_files, "file_sha", "left_semi"),
-                    modifiers_materialized=materialize_modifiers),
+                    nodes_raw.join(valid_files, "file_sha", "left_semi")),
                 "nodes0")
         with stage("materialize.edges_stmt"):
-            edges_stmt = G.materialize_edges(st_valid, n_salts=n_salts)
-            # p2g only probes which object_ids already have an incoming
-            # translated_to/transcribed_to edge — a KB-sized projection.
-            if intermediate == "parquet":
-                # the wide frame checkpoints once; the probe reads it back
-                edges_stmt = _ckpt(edges_stmt, "edges_stmt")
-                p2g_probe = edges_stmt.filter(F.col("relation").isin(
-                    ["translated_to", "transcribed_to"]))\
-                    .select("relation", "object_id")
-            else:
-                # caching the full wide frame costs a second
-                # materialization of the heaviest shuffle and OOMs
-                # small-heap configs.  The probe doesn't need the deduped
-                # edges at all: edge dedup never changes WHICH
-                # (relation, object_id) pairs exist, so probing the raw
-                # statements under the same edge filter is equivalent —
-                # and it turns a full two-phase aggregation pass of every
-                # statement into a pushed-filter scan of the two rare
-                # relations.  The wide edge DAG then executes exactly
-                # once, inside the union write below.
-                p2g_probe = _ckpt(
-                    st_valid.filter(
-                        F.col("edge_key").isNotNull() & ~F.col("nested")
-                        & F.col("relation").isin(
-                            ["translated_to", "transcribed_to"]))
-                    .select("relation", "object_id").distinct(),
-                    "p2g_probe")
+            # the wide frame checkpoints once; p2g only probes which
+            # object_ids already have an incoming translated_to /
+            # transcribed_to edge, a KB-sized projection read back from it
+            edges_stmt = _ckpt(G.materialize_edges(st_valid), "edges_stmt")
+            p2g_probe = edges_stmt.filter(F.col("relation").isin(
+                ["translated_to", "transcribed_to"]))\
+                .select("relation", "object_id")
         with stage("materialize.struct_edges"):
             struct_edges = _ckpt(
                 G.materialize_structural_edges(
@@ -312,19 +268,16 @@ def run_pipeline(
                                          "left_semi")),
                 "struct_edges")
 
-        if protein2gene:
-            with stage("materialize.p2g"):
-                nodes, p2g_edges = G.protein2gene(nodes, p2g_probe)
-                nodes = _ckpt(nodes, "nodes1")
-            edges = _align_edges(edges_stmt).unionByName(
-                _align_edges(p2g_edges))
-        else:
-            edges = _align_edges(edges_stmt)
+        with stage("materialize.p2g"):
+            nodes, p2g_edges = G.protein2gene(nodes, p2g_probe)
+            nodes = _ckpt(nodes, "nodes1")
 
-        all_edges = edges.unionByName(_align_edges(
-            struct_edges.select("edge_id", "relation", "relation_category",
-                                "subject_id", "object_id", "document_ids",
-                                "n_statements")))
+        all_edges = (
+            _align_edges(edges_stmt)
+            .unionByName(_align_edges(p2g_edges))
+            .unionByName(_align_edges(struct_edges.select(
+                "edge_id", "relation", "relation_category", "subject_id",
+                "object_id", "document_ids", "n_statements"))))
         obs_edges = Observation("edges")
         all_edges = all_edges.observe(
             obs_edges,
@@ -340,26 +293,22 @@ def run_pipeline(
         metrics["n_edges"] = int(eo["n_edges"])
 
     with stage("rollup"):
-        if involved or species:
-            closure = G.descendant_closure(
-                struct_edges, G.INVOLVED_GENES_EDGES).persist()
-            _persisted.append(closure)
+        closure = G.descendant_closure(
+            struct_edges, G.INVOLVED_GENES_EDGES).persist()
         nodes_base = nodes  # cached pre-rollup frame; both rollups derive
         # from it so neither embeds the other's aggregation DAG
         if involved:
             inv = G.involved_rollup(nodes_base, struct_edges,
                                     genes_closure=closure)
             nodes = nodes.join(inv, "node_id", "left")
-        if species:
-            sp = G.species_tagging(
-                nodes_base, struct_edges,
-                edges_out.filter(F.col("relation_category") != "ebel"),
-                genes_closure=closure)
-            nodes = nodes.join(sp, "node_id", "left")
-        if involved or species:
-            # link_hgnc consumes its input twice (existing-names anti-join),
-            # so the rollup output must be materialized exactly once here
-            nodes = _ckpt(nodes, "nodes2")
+        sp = G.species_tagging(
+            nodes_base, struct_edges,
+            edges_out.filter(F.col("relation_category") != "ebel"),
+            genes_closure=closure)
+        nodes = nodes.join(sp, "node_id", "left")
+        # link_hgnc consumes its input twice (existing-names anti-join),
+        # so the rollup output must be materialized exactly once here
+        nodes = _ckpt(nodes, "nodes2")
 
     with stage("link"):
         if enrich:
@@ -383,8 +332,7 @@ def run_pipeline(
         int(lin["n_ok"] or 0) if mode != "strict" else valid_files.count())
     metrics["wall_s"] = round(time.time() - t_total, 3)
 
-    for _df in _persisted:
-        _df.unpersist()
+    closure.unpersist()
 
     with open(os.path.join(out_dir, f"metrics_{run_id}.json"), "w") as fd:
         json.dump(metrics, fd, indent=2)

@@ -3561,7 +3561,7 @@ WITH used AS MATERIALIZED (
    AND ((h.namespace = 'HGNC' AND u.taxid = 9606)
      OR (h.namespace = 'MGI' AND u.taxid = 10090)
      OR (h.namespace = 'RGD' AND u.taxid = 10116))
-  LEFT JOIN (SELECT DISTINCT accession FROM up) ua
+  LEFT JOIN read_parquet('{_OB}/uniprot_acc/*.parquet') ua
     ON h.namespace = 'UNIPROT' AND h.name = ua.accession
 )"""
 

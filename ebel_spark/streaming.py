@@ -31,7 +31,6 @@ def stream_sources(
     out_dir: str,
     checkpoint_dir: str,
     available_now: bool = True,
-    materialize_modifiers: bool = False,
 ):
     """Incrementally parse BEL source files as they land in `src_dir`.
 
@@ -44,8 +43,7 @@ def stream_sources(
         .option("maxFilesPerTrigger", 16)
         .parquet(src_dir)
     )
-    parsed = parse_sources(stream,
-                           materialize_modifiers=materialize_modifiers)
+    parsed = parse_sources(stream)
     writer = (
         parsed.writeStream
         .format("parquet")

@@ -111,3 +111,49 @@ class TestBelQueryTwins:
                                    ocols, otypes) == []
         assert srows
         assert cc.norm_rows(sdf.columns, srows) == cc.norm_rows(ocols, orows)
+
+
+class TestLinkedAccTwin:
+    def test_uniprot_passthrough_matches_any_accession(self, spark, tmp_path):
+        """The enrichment twins' `acc` CTE must resolve a UNIPROT-namespace
+        node against EVERY accession of the dim, as link.link_uniprot does
+        — not only the min accession per (taxid, symbol)."""
+        import duckdb
+        import pandas as pd
+
+        from ebel_spark import link as L
+        from ebel_spark import queries as Q
+        from ebel_spark.oracle_data import uniprot_link_tables
+
+        uniprot = pd.DataFrame([
+            ("P11111", "Akt kinase", 9606, "AKT1"),
+            ("Q99999", "Akt kinase isoform", 9606, "AKT1"),
+        ], columns=["accession", "recommended_name", "taxid", "gene_symbol"])
+        nodes = pd.DataFrame([
+            ("protein", 'p(UNIPROT:"Q99999")', "UNIPROT", "Q99999"),
+            ("protein", 'p(UNIPROT:"P11111")', "UNIPROT", "P11111"),
+            ("protein", 'p(HGNC:"AKT1")', "HGNC", "AKT1"),
+        ], columns=["node_class", "bel", "namespace", "name"])
+        tables = {
+            "nodes_raw": nodes,
+            "hgnc_sym": pd.DataFrame({"symbol": ["AKT1"]}),
+            "hgnc_prev": pd.DataFrame({"prev": ["AKT0"], "symbol": ["AKT9"]}),
+            **uniprot_link_tables(uniprot),
+        }
+        for name, pdf in tables.items():
+            (tmp_path / name).mkdir()
+            pdf.to_parquet(tmp_path / name / "part-0.parquet", index=False)
+        sql = (Q._LINKED_ACC_SQL.replace(Q._OB, str(tmp_path))
+               + "SELECT bel, uniprot FROM acc")
+        twin = dict(duckdb.sql(sql).fetchall())
+
+        linked = L.link_uniprot(spark.createDataFrame(nodes),
+                                spark.createDataFrame(uniprot))
+        got = {r.bel: r.uniprot
+               for r in linked.select("bel", "uniprot").collect()}
+        assert got == {
+            'p(UNIPROT:"Q99999")': "Q99999",
+            'p(UNIPROT:"P11111")': "P11111",
+            'p(HGNC:"AKT1")': "P11111",
+        }
+        assert twin == got

@@ -8,6 +8,26 @@ from ebel_spark.corpus import CorpusProfile, corpus_spark
 from ebel_spark.pipeline import run_pipeline, verify_invariant
 
 
+# regression snapshot of the `out` fixture's build, incl. the p2g
+# translated_to / transcribed_to edges (see test_regression_snapshot)
+SNAPSHOT_METRICS = {
+    "n_files": 20, "n_statements": 572, "n_valid_files": 19, "n_errors": 26,
+    "n_triples": 1293, "n_edges": 1411, "n_nodes": 1493,
+}
+SNAPSHOT_RELATIONS = {
+    "association": 25, "causes_no_change": 12, "decreases": 104,
+    "directly_decreases": 44, "directly_increases": 67, "equivalent_to": 6,
+    "has__protein": 118, "has_member": 3, "increases": 172, "is_a": 4,
+    "negative_correlation": 23, "orthologous": 2, "positive_correlation": 47,
+    "regulates": 24, "transcribed_to": 380, "translated_to": 380,
+}
+SNAPSHOT_CLASSES = {
+    "abundance": 100, "activity": 37, "biological_process": 79,
+    "complex": 37, "degradation": 20, "gene": 442, "micro_rna": 13,
+    "pathology": 5, "protein": 380, "rna": 380,
+}
+
+
 @pytest.fixture(scope="module")
 def out(spark, tmp_path_factory):
     out_dir = str(tmp_path_factory.mktemp("belout"))
@@ -25,6 +45,22 @@ class TestPipelineE2E:
         assert m["n_statements"] > 200
         assert m["n_triples"] > 100
         assert m["n_nodes"] > 100
+
+    def test_regression_snapshot(self, spark, out):
+        """Regression snapshot, NOT a reference oracle: the exact counts
+        this corpus (20 files x 30 statements, default seed) produced when
+        the snapshot was recorded.  Any change to parse, validation, dedup,
+        protein2gene or the path guard moves at least one of them."""
+        m = out["metrics"]
+        assert {k: m[k] for k in SNAPSHOT_METRICS} == SNAPSHOT_METRICS
+        edges = spark.read.parquet(out["dir"] + "/edges")
+        nodes = spark.read.parquet(out["dir"] + "/nodes")
+        assert {r["relation"]: r["count"] for r in
+                edges.groupBy("relation").count().collect()} \
+            == SNAPSHOT_RELATIONS
+        assert {r["node_class"]: r["count"] for r in
+                nodes.groupBy("node_class").count().collect()} \
+            == SNAPSHOT_CLASSES
 
     def test_row_invariant(self, spark, out):
         assert verify_invariant(spark, out["src"], out["dir"]) == 0
@@ -165,7 +201,7 @@ class TestPipelineE2E:
         )
         out_dir = str(tmp_path / "rep")
         m = run_pipeline(spark, src, out_dir, run_id="rep", repair=True,
-                         enrich=False, involved=False, species=False)
+                         enrich=False, involved=False)
         assert m["n_valid_files"] == 1
         assert m["n_triples"] >= 1
         # invariant still holds on the ORIGINAL content
@@ -183,3 +219,50 @@ class TestPipelineE2E:
         med = nodes.filter("node_class = 'protein'").approxQuantile(
             "n_occurrences", [0.5], 0.01)[0]
         assert top.n_occurrences > 5 * med
+
+
+def test_cli_flags_map_onto_run_pipeline(monkeypatch):
+    """Each `main()` flag, set alone, changes exactly its own run_pipeline
+    keyword; every keyword main() passes is a run_pipeline parameter, and
+    the CLI defaults are the API defaults.  No Spark job runs: session,
+    corpus and pipeline are fakes."""
+    import inspect
+
+    from ebel_spark import corpus as corpus_mod
+    from ebel_spark import pipeline, session
+
+    params = inspect.signature(run_pipeline).parameters
+    calls = {}
+    monkeypatch.setattr(session, "get_spark",
+                        lambda **kw: calls.update(spark=kw) or "S")
+    monkeypatch.setattr(corpus_mod, "corpus_spark",
+                        lambda spark, profile: profile)
+    monkeypatch.setattr(pipeline, "run_pipeline",
+                        lambda *a, **kw: calls.update(run=(a, kw)) or {})
+
+    def run(*flags):
+        pipeline.main(["--out", "/o", *flags])
+        return calls["run"]
+
+    (spark, profile, out_dir), base = run()
+    assert (spark, profile, out_dir) == ("S", corpus_mod.SMALL, "/o")
+    assert set(base) <= set(params)
+    assert base == {k: params[k].default for k in base}
+    for flags, want in [
+        (["--mode", "strict"], {"mode": "strict"}),
+        (["--resume"], {"resume": True}),
+        (["--no-enrich"], {"enrich": False}),
+        (["--no-involved"], {"involved": False}),
+        (["--no-hints"], {"with_hints": False}),
+        (["--parse-partitions", "7"], {"parse_partitions": 7}),
+        (["--repair"], {"repair": True}),
+        (["--error-report", "r.csv"], {"error_report": "r.csv"}),
+        (["--format", "iceberg"], {"output_format": "iceberg"}),
+        (["--catalog", "cat"], {"catalog": "cat"}),
+    ]:
+        assert run(*flags)[1] == {**base, **want}, flags
+
+    (_, profile, _), kw = run("--source", "synthetic:3,4", "--cores", "2")
+    assert (profile.n_files, profile.statements_per_file) == (3, 4)
+    assert calls["spark"] == {"cores": 2, "app_name": "ebel-spark-pipeline"}
+    assert kw == base

@@ -14,6 +14,8 @@ and Return-False-line oracles in test_belc_parser.py.
 import json
 import os
 
+import pytest
+
 from ebel_spark.belc.canon import bel_string, fold_statements
 from ebel_spark.belc.scriptproc import process_file
 
@@ -37,6 +39,7 @@ def triples_from_ir(statements_and_sets) -> set:
     return out
 
 
+@pytest.mark.skipif(not os.path.isdir(REF), reason="reference fixtures absent")
 class TestTriplePR:
     def test_pr_vs_reference_golden_json(self):
         with open(os.path.join(REF, "basic_import_test.bel.json")) as fd:
