@@ -15,6 +15,49 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _mem_total_kb() -> int | None:
+    """Physical memory (`MemTotal` of /proc/meminfo) in KiB, or None where
+    it cannot be read."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return int(line.split()[1])
+    except (OSError, ValueError, IndexError):
+        pass
+    return None
+
+
+def driver_memory_conf(cores: int, mem_kb: int | None = None) -> dict:
+    """`spark.driver.memory` and the -Xms that pins it, for `cores` task
+    slots on a host with `mem_kb` KiB of physical memory (default: this
+    host's `MemTotal`).  `SPARK_DRIVER_MEM`, where set, wins.
+
+    local mode runs driver + all task threads in ONE JVM, so the heap
+    scales with the task-slot count at 1.5 GB per slot, or concurrent
+    tasks thrash GC (a 4N-executor cluster has 4x the memory of an
+    N-executor one, so the local proxy must too).  -Xms is pinned to
+    -Xmx: G1's dynamic commit/uncommit of a growing heap showed up as
+    60-98% *system* CPU (kernel page zeroing) in vmstat, randomly
+    multiplying stage times 3-20x.  Under load G1 touches all of a
+    pinned heap, so it is capped at 75% of physical memory --
+    Spark's hardware-provisioning guide: "at most 75% of the memory for
+    Spark" -- leaving the rest to the OS, the Python workers and any
+    sibling JVM (a local-cluster run or a spark-submit child beside this
+    session).  Uncapped, 32 slots on a 16 GB host ask for a pinned 48 GB
+    heap the JVM cannot commit.  Where `MemTotal` cannot be read, the
+    slot rule alone applies."""
+    mem = os.environ.get("SPARK_DRIVER_MEM")
+    if not mem:
+        heap_gb = int(cores * 1.5)
+        mem_kb = _mem_total_kb() if mem_kb is None else mem_kb
+        if mem_kb is not None:
+            heap_gb = min(heap_gb, max(1, int(mem_kb * 0.75) >> 20))
+        mem = f"{heap_gb}g"
+    return {"spark.driver.memory": mem,
+            "spark.driver.extraJavaOptions": f"-Dlog4j2.level=error -Xms{mem}"}
+
+
 def get_spark(
     cores: int | None = None,
     app_name: str = "ebel-spark",
@@ -32,14 +75,6 @@ def get_spark(
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if shuffle_partitions is None:
         shuffle_partitions = max(cores * 2, 16)
-    # local mode runs driver + all task threads in ONE JVM: the heap must
-    # scale with the task-slot count or 32 concurrent tasks thrash GC.
-    # -Xms is pinned to -Xmx: G1's dynamic commit/uncommit of a growing
-    # heap showed up as 60-98% *system* CPU (kernel page zeroing) in
-    # vmstat, randomly multiplying stage times 3-20x.
-    # memory scales with the slot count (a 4N-executor cluster has 4x the
-    # memory of an N-executor one, so the local proxy must too)
-    default_mem = f"{max(12, int(cores * 1.5))}g"
     b = SparkSession.builder
     # under spark-submit the master comes from the launch command
     # (--master yarn / spark://...) and must not be overridden.  SparkConf()
@@ -79,8 +114,6 @@ def get_spark(
         # edge-dedup join).  Explicit F.broadcast() still overrides for
         # any genuinely big dimension.
         .config("spark.sql.autoBroadcastJoinThreshold", str(16 * 1024 * 1024))
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_DRIVER_MEM", default_mem))
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         # the parsed table's rows are ~25 KB of nested structs: the default
         # 4096-row reader batch needs ~100 MB of contiguous column vectors
@@ -113,11 +146,9 @@ def get_spark(
         # two iterations later, exactly the localCheckpoint lifetime.
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         .config("spark.ui.enabled", "false")
-        .config(
-            "spark.driver.extraJavaOptions",
-            "-Dlog4j2.level=error -Xms"
-            + os.environ.get("SPARK_DRIVER_MEM", default_mem))
     )
+    for k, v in driver_memory_conf(cores).items():
+        b = b.config(k, v)
     # ad-hoc conf overrides for experiments without touching callers:
     # SPARK_GRAFT_CONF="k1=v1;k2=v2" (applied before `extra`, which wins)
     for kv in filter(None, os.environ.get("SPARK_GRAFT_CONF", "").split(";")):

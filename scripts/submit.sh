@@ -30,8 +30,14 @@ EOF
 SPARK_SUBMIT="$(python -c 'import pyspark, os; print(os.path.join(os.path.dirname(pyspark.__file__), "bin", "spark-submit"))')"
 
 # driver memory must be set on the submit command line: once the JVM is up,
-# in-app spark.driver.memory / -Xms configs are silently ignored
-DRIVER_MEM="${SPARK_DRIVER_MEM:-48g}"
+# in-app spark.driver.memory / -Xms configs are silently ignored.  Take it
+# from get_spark's rule for the same slot count: SPARK_DRIVER_MEM if set,
+# else 1.5 GB per slot capped at 75% of physical memory.
+DRIVER_MEM="$(cd "$REPO" && python -c '
+import sys
+from ebel_spark.session import driver_memory_conf
+print(driver_memory_conf(int(sys.argv[1]))["spark.driver.memory"])
+' "${SPARK_GRAFT_CPUS:-32}")"
 
 exec "$SPARK_SUBMIT" \
     --master "$MASTER" \
