@@ -19,7 +19,14 @@ import json
 import re
 from typing import Any, Iterator, Optional
 
-from .vocab import BEL_FUNC_SHORT, NORMALIZED_PMOD
+from .vocab import (
+    BEL_FUNC_SHORT,
+    GENE_LIKE_CLASSES,
+    INVOLVED_GENES_EDGES,
+    INVOLVED_OTHER_EDGES,
+    NORMALIZED_PMOD,
+    SPECIES_NAMESPACE,
+)
 
 _RE_PMID = re.compile(r"^\d+$")
 _RE_EVIDENCE_WS = re.compile(r"\s*\\\s*\n\s*")
@@ -120,7 +127,7 @@ def extract_nodes(
     """Recursively flatten an IR term into node rows + has__<class> edges.
 
     Returns (node_class, node_id) of the root.  ``nodes`` rows:
-    (node_class, bel, namespace, name, props_json, has_modifiers).
+    (node_class, bel, namespace, name, props_json, has_modifiers, node_id).
 
     By default modifier terms (pmod/var/frag/loc/gmod) are NOT materialized
     as nodes — this matches the graph-count oracle of the reference test
@@ -167,11 +174,69 @@ def extract_nodes(
     nodes.append((
         node_class, bel, namespace, name,
         json.dumps(extra, sort_keys=True) if extra else None,
-        has_modifiers,
+        has_modifiers, nid,
     ))
     for child_class, child_id in children:
         child_edges.append((f"has__{child_class}", nid, child_id))
     return node_class, nid
+
+
+def term_rollups(
+    info: dict[str, tuple], child_edges,
+) -> dict[str, tuple[list, list, Optional[int]]]:
+    """involved_genes / involved_other / inferred_species of every node of
+    one file (biodbs/bel.py:555-598 and 419-454).
+
+    ``info`` maps node_id -> (node_class, namespace, name) in extraction
+    order; ``child_edges`` are the file's distinct (relation, parent_id,
+    child_id) has__* edges.  A term's has__* subtree is part of the term
+    itself (node ids are content-addressed), so the file that holds the
+    term holds its whole closure, and a per-file pass gives the same values
+    as a closure over the global structural-edge table, at any depth.
+
+    - involved_genes: sorted names of the gene-like nodes reachable over
+      INVOLVED_GENES_EDGES, the node itself included;
+    - involved_other: sorted names of the other named nodes reachable over
+      INVOLVED_OTHER_EDGES, the node itself included;
+    - inferred_species: the taxid of the one non-null namespace among the
+      gene-like nodes reachable over INVOLVED_GENES_EDGES, when there is
+      exactly one and it is in SPECIES_NAMESPACE, else None.
+    """
+    gene_kids: dict[str, list] = {}
+    other_kids: dict[str, list] = {}
+    for rel, parent, child in child_edges:
+        if rel in INVOLVED_GENES_EDGES:
+            gene_kids.setdefault(parent, []).append(child)
+        if rel in INVOLVED_OTHER_EDGES:
+            other_kids.setdefault(parent, []).append(child)
+
+    # extract_nodes appends a term only after all of its children, so in
+    # extraction order every child's sets are final before its parent's:
+    # one pass is the memoised DFS, without the recursion
+    genes: dict[str, tuple[set, set]] = {}  # names, namespaces
+    other: dict[str, set] = {}
+    out = {}
+    for nid, (cls, ns, name) in info.items():
+        g_names, g_nss, o_names = set(), set(), set()
+        if cls in GENE_LIKE_CLASSES:
+            if name:
+                g_names.add(name)
+            if ns:
+                g_nss.add(ns)
+        elif name:
+            o_names.add(name)
+        for kid in gene_kids.get(nid, ()):
+            k_names, k_nss = genes[kid]
+            g_names |= k_names
+            g_nss |= k_nss
+        for kid in other_kids.get(nid, ()):
+            o_names |= other[kid]
+        genes[nid] = (g_names, g_nss)
+        other[nid] = o_names
+        species = (SPECIES_NAMESPACE.get(next(iter(g_nss)))
+                   if len(g_nss) == 1 else None)
+        out[nid] = (sorted(g_names), sorted(o_names), species)
+    return out
 
 
 # ---------------------------------------------------------------------------

@@ -10,7 +10,8 @@ from __future__ import annotations
 import json
 from typing import Any, Optional
 
-from .canon import bel_string, edge_profile, extract_nodes, fold_statements
+from .canon import (bel_string, edge_profile, extract_nodes, fold_statements,
+                    term_rollups)
 from .parse import parse_script
 from .vocab import RELATION_CATEGORY
 
@@ -92,22 +93,29 @@ def process_file(
     # within-file node dedup: same (class, bel) -> one row, OR the
     # has_modifiers flags (bel string determines modifiers, so flags agree)
     node_map: dict[tuple, list] = {}
-    for node_class, bel, namespace, name, props, has_mods in nodes_raw:
+    for node_class, bel, namespace, name, props, has_mods, nid in nodes_raw:
         key = (node_class, bel)
         row = node_map.get(key)
         if row is None:
-            node_map[key] = [node_class, bel, namespace, name, props, has_mods]
+            node_map[key] = [node_class, bel, namespace, name, props,
+                             has_mods, nid]
         elif has_mods:
             row[5] = True
-    nodes = [
-        {"node_class": c, "bel": b, "namespace": ns, "name": nm,
-         "props": pr, "has_modifiers": hm}
-        for c, b, ns, nm, pr, hm in node_map.values()
-    ]
+    child_edges_raw = list(dict.fromkeys(child_edges_raw))
+    rollups = term_rollups(
+        {r[6]: (r[0], r[2], r[3]) for r in node_map.values()},
+        child_edges_raw)
+    nodes = []
+    for c, b, ns, nm, pr, hm, nid in node_map.values():
+        genes, other, species = rollups[nid]
+        nodes.append({"node_class": c, "bel": b, "namespace": ns,
+                      "name": nm, "props": pr, "has_modifiers": hm,
+                      "involved_genes": genes, "involved_other": other,
+                      "inferred_species": species})
 
     child_edges = [
         {"relation": rel, "subject_id": s, "object_id": o}
-        for rel, s, o in dict.fromkeys(child_edges_raw)
+        for rel, s, o in child_edges_raw
     ]
 
     out: dict[str, Any] = {

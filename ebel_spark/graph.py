@@ -12,7 +12,8 @@ DataFrame algebra:
                     (importer.py:353-356)
 - pure tagging    <- biodbs/bel.py:489-494
 - protein->rna->gene generation  <- biodbs/bel.py:622-674
-- involved_genes/involved_other rollup  <- biodbs/bel.py:555-598
+- involved_genes/involved_other rollup  <- biodbs/bel.py:555-598, per
+                    term in the compiler (belc.canon.term_rollups)
 - species tagging <- biodbs/bel.py:419-454
 """
 
@@ -24,8 +25,6 @@ from pyspark.sql.window import Window
 from .belc.vocab import (
     EDGE_CATEGORY_PARENTS,
     GENE_LIKE_CLASSES,
-    INVOLVED_GENES_EDGES,
-    INVOLVED_OTHER_EDGES,
     NODE_CLASS_ANCESTORS,
     PURE_CLASSES,
     RELATION_CATEGORY,
@@ -97,6 +96,11 @@ def cut_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
 # nodes
 # ---------------------------------------------------------------------------
 
+_ROLLUP_COLS = ("involved_genes", "involved_other", "inferred_species")
+_NODE_COLS = ("node_id", "node_class", "bel", "namespace", "name", "props",
+              "has_modifiers", "pure", "n_occurrences", *_ROLLUP_COLS)
+
+
 def materialize_nodes(nodes_tbl: DataFrame) -> DataFrame:
     """Dedup per-file node rows into the global node table.
 
@@ -109,6 +113,10 @@ def materialize_nodes(nodes_tbl: DataFrame) -> DataFrame:
     nodes are never materialized (the reference true_values behavior), so
     no such edges exist and every node of a pure-eligible class is pure —
     including modified terms like p(HGNC:"IL2",pmod(Ph)).
+
+    involved_genes / involved_other / inferred_species are the compiler's
+    per-term has__* rollups (belc.canon.term_rollups), identical in every
+    file that holds the term, so any one occurrence carries them.
     """
     deduped = (
         nodes_tbl.groupBy("node_class", "bel")
@@ -118,6 +126,7 @@ def materialize_nodes(nodes_tbl: DataFrame) -> DataFrame:
             F.first("props", ignorenulls=True).alias("props"),
             F.max("has_modifiers").alias("has_modifiers"),
             F.count(F.lit(1)).alias("n_occurrences"),
+            *[F.first(c).alias(c) for c in _ROLLUP_COLS],
         )
     )
     pure_classes = F.array(*[F.lit(c) for c in sorted(PURE_CLASSES)])
@@ -126,10 +135,7 @@ def materialize_nodes(nodes_tbl: DataFrame) -> DataFrame:
         .withColumn("node_id", node_id_col(F.col("node_class"), F.col("bel")))
         .withColumn("pure",
                     F.array_contains(pure_classes, F.col("node_class")))
-        .select(
-            "node_id", "node_class", "bel", "namespace", "name", "props",
-            "has_modifiers", "pure", "n_occurrences",
-        )
+        .select(*_NODE_COLS)
     )
 
 
@@ -239,7 +245,8 @@ def _missing_counterparts(
 ) -> tuple[DataFrame, DataFrame]:
     """biodbs/bel.py:640-674: for each pure `to_class` node without an
     incoming `edge_name` edge, create the pure `from_class` counterpart and
-    the edge from it."""
+    the edge from it.  A counterpart is a leaf term, so its has__*
+    rollups are its own name and namespace."""
     has_in = (
         edges_in.filter(F.col("relation") == edge_name)
         .select("object_id").distinct()
@@ -262,6 +269,9 @@ def _missing_counterparts(
         F.lit(False).alias("has_modifiers"),
         F.lit(True).alias("pure"),
         F.lit(0).cast("long").alias("n_occurrences"),
+        F.array("name").alias("involved_genes"),
+        F.array().cast("array<string>").alias("involved_other"),
+        _species_of_namespace().alias("inferred_species"),
     ).withColumn("node_id", node_id_col(F.col("node_class"), F.col("bel")))
 
     new_edges = targets.select(
@@ -276,10 +286,6 @@ def _missing_counterparts(
                      F.lit(None).cast("string"), F.lit(""), F.lit("")),
     )
     return new_nodes, new_edges
-
-
-_NODE_COLS = ("node_id", "node_class", "bel", "namespace", "name", "props",
-              "has_modifiers", "pure", "n_occurrences")
 
 
 def _union_new_nodes(nodes: DataFrame, new_nodes: DataFrame) -> DataFrame:
@@ -314,172 +320,38 @@ def protein2gene(nodes: DataFrame, edges: DataFrame) -> tuple[DataFrame, DataFra
 
 
 # ---------------------------------------------------------------------------
-# involved rollup + species (bounded-depth traversal as unrolled self-joins)
+# species
 # ---------------------------------------------------------------------------
 
-def descendant_closure(
-    struct_edges: DataFrame, relations: tuple[str, ...], max_depth: int = 8
-) -> DataFrame:
-    """(root_id, desc_id) pairs reachable over the given has__* relations,
-    NOT including the trivial self pair.  BEL terms are trees with nesting
-    depth bounded by the grammar's practical use (<= max_depth), so the
-    closure unrolls into one static DAG — no iterative driver actions.
-    """
-    e = (
-        struct_edges.filter(F.col("relation").isin(list(relations)))
-        .select(F.col("subject_id").alias("src"), F.col("object_id").alias("dst"))
-        .distinct()
-    )
-
-    def extend(frontier):
-        return (
-            frontier.alias("f")
-            .join(e.alias("e"), F.col("f.nid") == F.col("e.src"))
-            .select(F.col("f.root").alias("root"), F.col("e.dst").alias("nid"))
-        )
-
-    level = e.select(F.col("src").alias("root"), F.col("dst").alias("nid"))
-    acc = level
-    frontier = level
-    # Unroll the first `_STATIC_DEPTH` levels as one lazy DAG (the shuffle
-    # behind `e` is planned once and reused across levels via
-    # ReusedExchange), then probe whether anything deeper exists at all —
-    # real BEL terms nest 2-4 deep, so the probe is one limit-1 job instead
-    # of a blocking materialize+check per level.
-    _STATIC_DEPTH = 4
-    for _ in range(min(_STATIC_DEPTH, max_depth) - 1):
-        frontier = extend(frontier)
-        acc = acc.unionByName(frontier)
-    depth = min(_STATIC_DEPTH, max_depth)
-    if depth < max_depth:
-        frontier = extend(frontier).transform(cut_lineage)
-        while not frontier.isEmpty():
-            acc = acc.unionByName(frontier)
-            depth += 1
-            if depth >= max_depth:
-                # don't extend a level that could never be added to acc —
-                # that would eagerly materialize one wasted Spark job
-                break
-            frontier = extend(frontier).transform(cut_lineage)
-    return acc.distinct()
+def _species_of_namespace():
+    """taxid of the row's namespace, null outside SPECIES_NAMESPACE."""
+    smap = F.create_map(*[F.lit(x) for kv in SPECIES_NAMESPACE.items()
+                          for x in kv])
+    return F.when(F.col("namespace").isin(list(SPECIES_NAMESPACE)),
+                  F.element_at(smap, F.col("namespace")))
 
 
-def involved_rollup(
-    nodes: DataFrame, struct_edges: DataFrame, max_depth: int = 8,
-    genes_closure: DataFrame | None = None,
-) -> DataFrame:
-    """node_id -> involved_genes / involved_other arrays
-    (biodbs/bel.py:555-598; traversal includes the start node).
-
-    ``genes_closure`` lets the caller reuse one cached closure across the
-    involved/species passes instead of recomputing the traversal DAG.
-    """
-    self_pairs = nodes.select(
-        F.col("node_id").alias("root"), F.col("node_id").alias("nid")
-    )
-
-    def rollup(relations, keep_gene_like: bool, colname: str) -> DataFrame:
-        if keep_gene_like and genes_closure is not None:
-            reach = genes_closure
-        else:
-            reach = descendant_closure(struct_edges, relations, max_depth)
-        # no distinct needed: the closure is distinct and never contains
-        # (x, x) — a content-addressed term tree cannot reach itself
-        reach = reach.unionByName(self_pairs)
-        d = nodes.select(
-            F.col("node_id").alias("nid"),
-            F.col("node_class").alias("d_class"),
-            F.col("name").alias("d_name"),
-        )
-        joined = reach.join(d, "nid")
-        gene_like = F.col("d_class").isin(list(GENE_LIKE_CLASSES))
-        cond = gene_like if keep_gene_like else (
-            ~gene_like & F.col("d_name").isNotNull()
-        )
-        return (
-            joined.filter(cond & F.col("d_name").isNotNull())
-            .groupBy("root")
-            .agg(F.array_sort(F.collect_set("d_name")).alias(colname))
-        )
-
-    genes = rollup(INVOLVED_GENES_EDGES, True, "involved_genes")
-    other = rollup(INVOLVED_OTHER_EDGES, False, "involved_other")
-    return (
-        nodes.select("node_id")
-        .join(genes, nodes.node_id == genes.root, "left").drop("root")
-        .join(other, nodes.node_id == other.root, "left").drop("root")
-        .withColumn("involved_genes", F.coalesce("involved_genes", F.array()))
-        .withColumn("involved_other", F.coalesce("involved_other", F.array()))
-    )
-
-
-def species_map_expr():
-    m = []
-    for ns, taxid in SPECIES_NAMESPACE.items():
-        m.extend([F.lit(ns), F.lit(taxid)])
-    return F.create_map(*m)
-
-
-def species_tagging(
-    nodes: DataFrame, struct_edges: DataFrame, edges: DataFrame,
-    max_depth: int = 8, genes_closure: DataFrame | None = None,
-) -> DataFrame:
-    """node_id -> species taxid (biodbs/bel.py:419-454): direct namespace
-    rule for protein/rna/gene; unique-descendant-namespace rule for nodes
-    incident to at least one bel_relation edge."""
-    smap = species_map_expr()
-
-    direct = nodes.filter(
-        F.col("node_class").isin(list(GENE_LIKE_CLASSES))
-        & F.col("namespace").isin(list(SPECIES_NAMESPACE))
-    ).select("node_id", F.element_at(smap, F.col("namespace")).alias("species"))
-
+def tag_species(nodes: DataFrame, edges: DataFrame) -> DataFrame:
+    """Replace the compiler's inferred_species by the species column
+    (biodbs/bel.py:419-454): the direct namespace rule for protein/rna/gene;
+    else, for nodes incident to at least one of the bel_relation ``edges``,
+    the unique gene-like descendant namespace (inferred_species).  The
+    direct rule takes precedence when both fire (bel.py applies it first);
+    coalesce, not max — max would pick the numerically larger taxid."""
     incident = (
         edges.select(F.col("subject_id").alias("node_id"))
         .unionByName(edges.select(F.col("object_id").alias("node_id")))
         .distinct()
+        .withColumn("_incident", F.lit(True))
     )
-    if genes_closure is None:
-        genes_closure = descendant_closure(struct_edges, INVOLVED_GENES_EDGES,
-                                           max_depth)
-    reach = genes_closure
-    self_pairs = incident.select(
-        F.col("node_id").alias("root"), F.col("node_id").alias("nid"))
-    reach = (
-        incident.join(reach, incident.node_id == reach.root)
-        .select("root", "nid")
-        .unionByName(self_pairs)
+    direct = F.when(F.col("node_class").isin(list(GENE_LIKE_CLASSES)),
+                    _species_of_namespace())
+    inferred = F.when(F.col("_incident"), F.col("inferred_species"))
+    return (
+        nodes.join(incident, "node_id", "left")
+        .withColumn("species", F.coalesce(direct, inferred))
+        .drop("_incident", "inferred_species")
     )
-    d = nodes.select(
-        F.col("node_id").alias("nid"), F.col("node_class").alias("d_class"),
-        F.col("namespace").alias("d_ns"),
-    )
-    uniq = (
-        reach.join(d, "nid")
-        .filter(F.col("d_class").isin(list(GENE_LIKE_CLASSES)))
-        .groupBy("root")
-        .agg(F.collect_set("d_ns").alias("nss"))
-        .filter(
-            (F.size("nss") == 1)
-            & F.element_at("nss", 1).isin(list(SPECIES_NAMESPACE))
-        )
-        .select(
-            F.col("root").alias("node_id"),
-            F.element_at(smap, F.element_at("nss", 1)).alias("species"),
-        )
-    )
-    # the direct-namespace rule takes precedence over the inferred
-    # unique-descendant rule when both fire (biodbs/bel.py:419-454 applies
-    # the direct rule first); coalesce, don't max — max would pick whichever
-    # taxid is numerically larger
-    both = (
-        direct.select("node_id", F.col("species").alias("sp_direct"))
-        .join(uniq.select("node_id", F.col("species").alias("sp_inferred")),
-              "node_id", "full")
-        .select("node_id",
-                F.coalesce("sp_direct", "sp_inferred").alias("species"))
-    )
-    return both
 
 
 def count_nodes_by_class(nodes: DataFrame) -> dict:
@@ -1585,8 +1457,8 @@ def path_query(
             raise ValueError(
                 "a name-only spec without a gene/rna/protein class filters "
                 "on involved_genes/involved_other membership (bel.py:920-"
-                "960); pass the involved_rollup-enriched nodes table — the "
-                "plain materialize_nodes output lacks those columns")
+                "960); pass a nodes table built by materialize_nodes, which "
+                "carries the compiler's per-term rollup columns")
         return nodes.filter(_node_spec_pred(spec)).select("bel").distinct()
 
     # start constraint on the subject of hop 1

@@ -27,6 +27,7 @@ import json
 import os
 import time
 import uuid
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
@@ -36,6 +37,10 @@ from . import link as L
 from . import parse as P
 from . import validate as V
 from .namespaces import build_dimensions, dims_to_spark
+
+# the local properties SparkContext.setJobGroup sets
+_JOB_GROUP_PROPS = ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel")
 
 EDGE_COLS = [
     "edge_id", "relation", "relation_category",
@@ -105,15 +110,29 @@ def run_pipeline(
         dims = build_dimensions()
     dim_dfs = dims_to_spark(spark, dims)
 
-    def stage(name):
-        class _S:
-            def __enter__(self):
-                self.t = time.time()
-                return self
+    # each stage runs its Spark jobs in its own job group, so the run can
+    # count them per stage; nested stages count towards their parent too
+    sc = spark.sparkContext
+    token = uuid.uuid4().hex[:12]
+    open_stages: list[str] = []
+    closed: list[tuple[str, str | None]] = []  # (stage, parent), exit order
 
-            def __exit__(self, *a):
-                metrics["stages"][name] = round(time.time() - self.t, 3)
-        return _S()
+    @contextmanager
+    def stage(name):
+        prev = {k: sc.getLocalProperty(k) for k in _JOB_GROUP_PROPS}
+        sc.setJobGroup(f"ebel_spark-{token}-{name}", name)
+        parent = open_stages[-1] if open_stages else None
+        open_stages.append(name)
+        t = time.time()
+        try:
+            yield
+        finally:
+            metrics["stages"][name] = round(time.time() - t, 3)
+            open_stages.pop()
+            closed.append((name, parent))
+            # restore the caller's group: None clears a property
+            for k, v in prev.items():
+                sc.setLocalProperty(k, v)
 
     parsed_path = os.path.join(out_dir, "parsed")
     lineage_path = os.path.join(out_dir, "lineage")
@@ -212,14 +231,14 @@ def run_pipeline(
     statements = P.statements_table(parsed)
     nodes_raw = P.nodes_table(parsed)
     child_edges_raw = P.child_edges_table(parsed)
-    # the entry/definition tables are tiny next to the wide parsed table;
-    # checkpointing them means the 4 validation families read a narrow
-    # table instead of re-exploding the nested parse output 4x
-    entries = _ckpt(P.entries_table(parsed), "entries")
-    defs = _ckpt(P.definitions_table(parsed), "defs")
 
     # ---- 3. validation -------------------------------------------------------
     with stage("validate"):
+        # the entry/definition tables are tiny next to the wide parsed
+        # table; checkpointing them means the 4 validation families read a
+        # narrow table instead of re-exploding the nested parse output 4x
+        entries = _ckpt(P.entries_table(parsed), "entries")
+        defs = _ckpt(P.definitions_table(parsed), "defs")
         ok_files = parsed.filter("ok").select("file_sha")
         sem_errors = V.semantic_errors(
             entries.join(ok_files, "file_sha", "left_semi"),
@@ -237,13 +256,16 @@ def run_pipeline(
         if error_report:
             V.write_error_report(errors, error_report)
 
-    # ---- 4. gate files -------------------------------------------------------
-    if mode == "strict":
-        bad = errors.select("file_sha").distinct()
-        valid_files = parsed.select("file_sha", "ok").filter("ok") \
-            .join(bad, "file_sha", "left_anti").select("file_sha")
-    else:
-        valid_files = parsed.filter("ok").select("file_sha")
+        # ---- 4. gate files ---------------------------------------------------
+        if mode == "strict":
+            bad = errors.select("file_sha").distinct()
+            valid_files = parsed.select("file_sha", "ok").filter("ok") \
+                .join(bad, "file_sha", "left_anti").select("file_sha")
+            metrics["n_valid_files"] = valid_files.count()
+        else:
+            valid_files = parsed.filter("ok").select("file_sha")
+            # SUM over an empty store observes null, not 0
+            metrics["n_valid_files"] = int(lin["n_ok"] or 0)
 
     # ---- 5. graph materialization --------------------------------------------
     with stage("materialize"):
@@ -270,7 +292,6 @@ def run_pipeline(
 
         with stage("materialize.p2g"):
             nodes, p2g_edges = G.protein2gene(nodes, p2g_probe)
-            nodes = _ckpt(nodes, "nodes1")
 
         all_edges = (
             _align_edges(edges_stmt)
@@ -293,21 +314,14 @@ def run_pipeline(
         metrics["n_edges"] = int(eo["n_edges"])
 
     with stage("rollup"):
-        closure = G.descendant_closure(
-            struct_edges, G.INVOLVED_GENES_EDGES).persist()
-        nodes_base = nodes  # cached pre-rollup frame; both rollups derive
-        # from it so neither embeds the other's aggregation DAG
-        if involved:
-            inv = G.involved_rollup(nodes_base, struct_edges,
-                                    genes_closure=closure)
-            nodes = nodes.join(inv, "node_id", "left")
-        sp = G.species_tagging(
-            nodes_base, struct_edges,
-            edges_out.filter(F.col("relation_category") != "ebel"),
-            genes_closure=closure)
-        nodes = nodes.join(sp, "node_id", "left")
+        # involved_* and inferred_species come per term from the compiler;
+        # what is left is the species rule, which needs the edge table
+        nodes = G.tag_species(
+            nodes, edges_out.filter(F.col("relation_category") != "ebel"))
+        if not involved:
+            nodes = nodes.drop("involved_genes", "involved_other")
         # link_hgnc consumes its input twice (existing-names anti-join),
-        # so the rollup output must be materialized exactly once here
+        # so the node table is materialized exactly once here
         nodes = _ckpt(nodes, "nodes2")
 
     with stage("link"):
@@ -327,12 +341,20 @@ def run_pipeline(
             fmt=output_format, catalog=catalog)
         metrics["n_nodes"] = obs_nodes.get["n"]
 
-    # SUM over an empty store observes null, not 0
-    metrics["n_valid_files"] = (
-        int(lin["n_ok"] or 0) if mode != "strict" else valid_files.count())
     metrics["wall_s"] = round(time.time() - t_total, 3)
-
-    closure.unpersist()
+    # counted after the run, not at each stage's exit: the status store is
+    # fed by an asynchronous listener, so a job's start may not be in it
+    # the moment the job returns
+    tracker = sc.statusTracker()
+    stage_jobs = {n: len(tracker.getJobIdsForGroup(f"ebel_spark-{token}-{n}"))
+                  for n, _ in closed}
+    for name, parent in closed:  # children close before their parent
+        if parent is not None:
+            stage_jobs[parent] += stage_jobs[name]
+    metrics["stage_jobs"] = stage_jobs
+    metrics["n_jobs"] = sum(stage_jobs[n] for n, p in closed if p is None)
+    metrics["driver_memory"] = sc.getConf().get("spark.driver.memory", None)
+    metrics["task_slots"] = sc.defaultParallelism
 
     with open(os.path.join(out_dir, f"metrics_{run_id}.json"), "w") as fd:
         json.dump(metrics, fd, indent=2)

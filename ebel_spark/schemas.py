@@ -67,9 +67,13 @@ STATEMENT_T = StructType([
     _f("edge_key", S),
 ])
 
+# involved_genes / involved_other / inferred_species: the per-term has__*
+# rollups (belc.canon.term_rollups), identical for a term in every file
 NODE_T = StructType([
     _f("node_class", S), _f("bel", S), _f("namespace", S), _f("name", S),
     _f("props", S), _f("has_modifiers", B),
+    _f("involved_genes", ArrayType(S)), _f("involved_other", ArrayType(S)),
+    _f("inferred_species", I),
 ])
 
 CHILD_EDGE_T = StructType([

@@ -29,6 +29,7 @@ from __future__ import annotations
 
 import os
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 
@@ -181,13 +182,19 @@ def write_metrics_table(
     Append-mode parquet: each run adds a few dozen rows keyed by run_id,
     so the table accumulates a queryable history across resumes."""
     run_id = str(metrics.get("run_id", ""))
-    rows = [(run_id, f"stage.{k}", float(v))
-            for k, v in metrics.get("stages", {}).items()]
+    rows = [(run_id, f"{prefix}.{k}", float(v))
+            for key, prefix in (("stages", "stage"),
+                                ("stage_jobs", "stage_jobs"))
+            for k, v in metrics.get(key, {}).items()]
     rows += [(run_id, k, float(v)) for k, v in metrics.items()
              if isinstance(v, (int, float))]
     if not rows:
         return
-    mdf = spark.createDataFrame(rows, "run_id string, metric string, "
-                                      "value double")
+    # a pandas frame takes the Arrow path; a list of tuples goes through
+    # the row-by-row pickler (30 rows on a 4-core host: 0.7-1.0 s per
+    # warm write against 0.12-0.2 s)
+    mdf = spark.createDataFrame(
+        pd.DataFrame(rows, columns=["run_id", "metric", "value"]),
+        "run_id string, metric string, value double")
     mdf.coalesce(1).write.mode("append").parquet(
         os.path.join(out_dir, "metrics"))

@@ -224,12 +224,12 @@ class TestPathQuery:
 
     def test_name_only_spec_needs_rollup_columns(self, spark, chain):
         # a name-only non-genic spec filters on involved_* membership;
-        # a plain nodes table (no rollup) must raise a clear error, not
-        # an AnalysisException deep in the join DAG
+        # a nodes table without the rollup columns must raise a clear
+        # error, not an AnalysisException deep in the join DAG
         plain = spark.createDataFrame(
             [("a", "protein", "HGNC", "A")],
             "bel string, node_class string, namespace string, name string")
-        with pytest.raises(ValueError, match="involved_rollup"):
+        with pytest.raises(ValueError, match="materialize_nodes"):
             G.path_query(chain, plain, start={"name": "A"})
 
     def test_last_differs_from_first_only(self, spark):

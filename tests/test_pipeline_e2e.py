@@ -26,6 +26,16 @@ SNAPSHOT_CLASSES = {
     "complex": 37, "degradation": 20, "gene": 442, "micro_rna": 13,
     "pathology": 5, "protein": 380, "rna": 380,
 }
+# per node_class: nodes with non-empty involved_genes / involved_other and
+# with a species (the has__* rollups and species tagging)
+SNAPSHOT_ROLLUPS = {
+    "involved_genes": {"activity": 37, "complex": 31, "degradation": 20,
+                       "gene": 442, "protein": 380, "rna": 380},
+    "involved_other": {"abundance": 100, "biological_process": 79,
+                       "complex": 6, "micro_rna": 13, "pathology": 5},
+    "species": {"activity": 34, "complex": 30, "degradation": 20,
+                "gene": 442, "protein": 380, "rna": 380},
+}
 
 
 @pytest.fixture(scope="module")
@@ -33,8 +43,15 @@ def out(spark, tmp_path_factory):
     out_dir = str(tmp_path_factory.mktemp("belout"))
     profile = CorpusProfile(n_files=20, statements_per_file=30)
     src = corpus_spark(spark, profile, partitions=4)
+    sc = spark.sparkContext
+    sc.setJobGroup("e2e-caller", "caller's group")
     metrics = run_pipeline(spark, src, out_dir, run_id="t1")
-    return {"dir": out_dir, "metrics": metrics, "src": src}
+    group_after = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    sc.setLocalProperty("spark.job.description", None)
+    sc.setLocalProperty("spark.job.interruptOnCancel", None)
+    return {"dir": out_dir, "metrics": metrics, "src": src,
+            "group_after": group_after}
 
 
 class TestPipelineE2E:
@@ -50,7 +67,8 @@ class TestPipelineE2E:
         """Regression snapshot, NOT a reference oracle: the exact counts
         this corpus (20 files x 30 statements, default seed) produced when
         the snapshot was recorded.  Any change to parse, validation, dedup,
-        protein2gene or the path guard moves at least one of them."""
+        protein2gene, the path guard, the has__* rollups or species
+        tagging moves at least one of them."""
         m = out["metrics"]
         assert {k: m[k] for k in SNAPSHOT_METRICS} == SNAPSHOT_METRICS
         edges = spark.read.parquet(out["dir"] + "/edges")
@@ -61,6 +79,33 @@ class TestPipelineE2E:
         assert {r["node_class"]: r["count"] for r in
                 nodes.groupBy("node_class").count().collect()} \
             == SNAPSHOT_CLASSES
+        for col, pred in (
+                ("involved_genes", F.size("involved_genes") > 0),
+                ("involved_other", F.size("involved_other") > 0),
+                ("species", F.col("species").isNotNull())):
+            assert {r["node_class"]: r["count"] for r in
+                    nodes.filter(pred).groupBy("node_class").count()
+                    .collect()} == SNAPSHOT_ROLLUPS[col], col
+
+    def test_stage_jobs(self, spark, out):
+        """Every stage counts its Spark jobs, nested stages count towards
+        their parent, and the caller's job group is back afterwards."""
+        m = out["metrics"]
+        jobs = m["stage_jobs"]
+        assert list(jobs) == list(m["stages"])
+        nested = [s for s in jobs if s.startswith("materialize.")]
+        assert nested and jobs["materialize"] >= sum(jobs[s] for s in nested)
+        top = [s for s in jobs if "." not in s]
+        assert m["n_jobs"] == sum(jobs[s] for s in top) > 0
+        assert all(jobs[s] > 0 for s in ("parse", "validate", "write"))
+        assert m["task_slots"] == spark.sparkContext.defaultParallelism
+        assert m["driver_memory"] == spark.conf.get("spark.driver.memory")
+        assert out["group_after"] == "e2e-caller"
+        table = {r.metric: r.value for r in
+                 spark.read.parquet(out["dir"] + "/metrics")
+                 .filter("run_id = 't1'").collect()}
+        assert table["stage_jobs.rollup"] == jobs["rollup"]
+        assert table["n_jobs"] == m["n_jobs"]
 
     def test_row_invariant(self, spark, out):
         assert verify_invariant(spark, out["src"], out["dir"]) == 0

@@ -163,7 +163,6 @@ class TestGraphCounts:
         src = _source_df(spark, [bel])
         parsed = P.parse_sources(src)
         nodes = G.materialize_nodes(P.nodes_table(parsed))
-        struct = G.materialize_structural_edges(P.child_edges_table(parsed))
 
         rows = {r.bel: r for r in nodes.collect()}
         assert rows['p(HGNC:"F1")'].pure
@@ -173,18 +172,12 @@ class TestGraphCounts:
         assert rows['p(HGNC:"T9",pmod(Ph))'].has_modifiers
         assert not rows['p(HGNC:"F1")'].has_modifiers
 
-        # involved_rollup skips a distinct() on the invariant that the
-        # structural closure never contains a self pair; guard it here
-        closure = G.descendant_closure(struct, G.INVOLVED_GENES_EDGES)
-        assert closure.filter("root = nid").count() == 0
-
-        inv = {r.node_id: r for r in
-               G.involved_rollup(nodes, struct).collect()}
+        # the per-term rollups ride through the node dedup
         cplx = rows['complex(a(CHEBI:"atp"),p(HGNC:"F1"),p(HGNC:"F2"))']
-        assert inv[cplx.node_id].involved_genes == ["F1", "F2"]
-        assert inv[cplx.node_id].involved_other == ["atp"]
+        assert cplx.involved_genes == ["F1", "F2"]
+        assert cplx.involved_other == ["atp"]
         prot = rows['p(HGNC:"F1")']
-        assert inv[prot.node_id].involved_genes == ["F1"]
+        assert prot.involved_genes == ["F1"]
 
     def test_species(self, spark):
         bel = (
@@ -199,10 +192,9 @@ class TestGraphCounts:
         src = _source_df(spark, [bel])
         parsed = P.parse_sources(src)
         nodes = G.materialize_nodes(P.nodes_table(parsed))
-        struct = G.materialize_structural_edges(P.child_edges_table(parsed))
         edges = G.materialize_edges(P.statements_table(parsed))
         sp = {r.node_id: r.species for r in
-              G.species_tagging(nodes, struct, edges).collect()}
+              G.tag_species(nodes, edges).collect()}
         byb = {r.bel: r.node_id for r in nodes.collect()}
         assert sp[byb['g(HGNC:"AKT1")']] == 9606
         assert sp[byb['g(MGI:"Akt1")']] == 10090
@@ -211,8 +203,9 @@ class TestGraphCounts:
         # a plain max() over taxids a human tag could never be overridden,
         # but the reference precedence is direct-rule-first (coalesce).
         # NB genuine direct-vs-inferred disagreement is structurally
-        # impossible (the closure's self pair puts the node's own namespace
-        # in the descendant set), so direct-first is asserted by shape:
+        # impossible (the compiler's rollup includes the node itself, so
+        # its own namespace is in the set), so direct-first is asserted by
+        # shape:
         # the mouse complex gets the inferred mouse taxid.
         assert sp[byb['complex(p(MGI:"Akt1"),p(MGI:"Trp53"))']] == 10090
 
