@@ -249,6 +249,11 @@ class TestPipelineE2E:
                          enrich=False, involved=False)
         assert m["n_valid_files"] == 1
         assert m["n_triples"] >= 1
+        # involved=False drops the compiler's involved_* columns only
+        cols = set(spark.read.parquet(out_dir + "/nodes").columns)
+        assert "species" in cols
+        assert not cols & {"involved_genes", "involved_other",
+                           "inferred_species"}
         # invariant still holds on the ORIGINAL content
         assert verify_invariant(spark, src, out_dir) == 0
 
