@@ -283,12 +283,10 @@ def run_pipeline(
             p2g_probe = edges_stmt.filter(F.col("relation").isin(
                 ["translated_to", "transcribed_to"]))\
                 .select("relation", "object_id")
-        with stage("materialize.struct_edges"):
-            struct_edges = _ckpt(
-                G.materialize_structural_edges(
-                    child_edges_raw.join(valid_files, "file_sha",
-                                         "left_semi")),
-                "struct_edges")
+        # the has__* edges have one consumer, the edges write below, so
+        # they are derived inside it rather than checkpointed
+        struct_edges = G.materialize_structural_edges(
+            child_edges_raw.join(valid_files, "file_sha", "left_semi"))
 
         with stage("materialize.p2g"):
             nodes, p2g_edges = G.protein2gene(nodes, p2g_probe)

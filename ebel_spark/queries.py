@@ -3030,7 +3030,22 @@ from .oracle_data import ORACLE_STMTS as _OS
 from .oracle_data import ensure_oracle_tables as _ensure_oracle
 
 
+#: per session (keyed by id(spark)): the persisted oracle-KG frames by
+#: name, "parsed" plus the shared derivations _kg_statements and
+#: _kg_uv_edges persist on first use
 _BEL_PARSED_MEMO: dict = {}
+
+
+def _session_frame(spark, name: str, build) -> DataFrame:
+    """The session's persisted frame `name`, built by build() and
+    persisted (MEMORY_AND_DISK, lazily: the first action fills it) on
+    first use.  ops.dedup.release_pins() leaves these alone: they live
+    as long as the session."""
+    frames = _BEL_PARSED_MEMO.setdefault(id(spark), {})
+    if name not in frames:
+        from pyspark import StorageLevel
+        frames[name] = build().persist(StorageLevel.MEMORY_AND_DISK)
+    return frames[name]
 
 
 def _bel_oracle_parsed(spark):
@@ -3040,27 +3055,24 @@ def _bel_oracle_parsed(spark):
     this table, and without the memo each re-ran the full mapInPandas
     parse (the most expensive stage in the whole gate).  The corpus is
     profile-sized (bounded), so the persisted blocks are small."""
-    key = id(spark)
-    if key in _BEL_PARSED_MEMO:
-        return _BEL_PARSED_MEMO[key]
-    from pyspark import StorageLevel
-
-    from .corpus import CorpusProfile, corpus_spark
-    _ensure_oracle()
-    profile = CorpusProfile(n_files=_OF, statements_per_file=_OS)
-    parsed = (P.parse_sources(corpus_spark(spark, profile, partitions=8))
-              .persist(StorageLevel.MEMORY_AND_DISK))
-    _BEL_PARSED_MEMO[key] = parsed
-    return parsed
+    def parse():
+        from .corpus import CorpusProfile, corpus_spark
+        _ensure_oracle()
+        profile = CorpusProfile(n_files=_OF, statements_per_file=_OS)
+        return P.parse_sources(corpus_spark(spark, profile, partitions=8))
+    return _session_frame(spark, "parsed", parse)
 
 
 # The oracle KG, derived in one place: every bel_* query takes its
 # statements, edges and nodes from the functions below, so "what is a KG
-# edge" is decided once.  Each call returns a fresh lazy DataFrame over the
-# one persisted parsed corpus; nothing here is cached on its own.
+# edge" is decided once.  The statements and the (u, v) edge list, which
+# most queries share, are persisted once per session next to the parsed
+# corpus (Lightweight Materialization, SIGMOD 2023: materialize what
+# several consumers share); the rest are fresh lazy frames over them.
 def _kg_statements(spark) -> DataFrame:
     """Per-assertion statement rows of the parseable oracle files."""
-    return P.statements_table(_bel_oracle_parsed(spark).filter("ok"))
+    return _session_frame(spark, "statements", lambda: P.statements_table(
+        _bel_oracle_parsed(spark).filter("ok")))
 
 
 def _kg_edge_statements(spark) -> DataFrame:
@@ -3078,7 +3090,8 @@ def _kg_pairs(spark) -> DataFrame:
 
 def _kg_uv_edges(spark) -> DataFrame:
     """The directed KG as a distinct (u, v) edge list."""
-    return _kg_pairs(spark).distinct()
+    return _session_frame(spark, "uv_edges",
+                          lambda: _kg_pairs(spark).distinct())
 
 
 def _kg_edges(spark) -> DataFrame:

@@ -158,7 +158,7 @@ def main():
     else:
         lines += ["All queries clean: BroadcastNestedLoopJoin appears only where it is the intended plan (broadcast range dims, exact baselines); "
                   "Python appears only in the parse / multimodal / corpus "
-                  "UDF surfaces."]
+                  "UDF surfaces and the one-task k-core / LPA rounds."]
     with open(os.path.join(os.path.dirname(os.path.dirname(
             os.path.abspath(__file__))), "PLANS.md"), "w") as fd:
         fd.write("\n".join(lines) + "\n")

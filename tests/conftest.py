@@ -21,3 +21,21 @@ def load_true_values():
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     return mod
+
+
+#: the skip reason of every test that reads the reference fixtures
+REFERENCE_SKIP = "reference fixtures absent"
+
+
+def pytest_terminal_summary(terminalreporter):
+    """Count and name the reference-oracle tests that did not run, so a
+    green run on a host without the reference fixtures says so."""
+    absent = [r.nodeid for r in terminalreporter.stats.get("skipped", [])
+              if isinstance(r.longrepr, tuple)
+              and REFERENCE_SKIP in r.longrepr[2]]
+    if absent:
+        terminalreporter.write_sep(
+            "-", f"{len(absent)} reference oracles not run "
+            f"({REFERENCE_SKIP})")
+        for nodeid in absent:
+            terminalreporter.write_line(nodeid)

@@ -6,6 +6,7 @@ instead of string-normalizing them away."""
 
 import importlib.util
 import os
+import time
 
 import pytest
 
@@ -89,28 +90,70 @@ class TestBelQueryTwins:
 
     @pytest.mark.parametrize("name", [
         "bel_triples", "bel_pair_pmi", "bel_kcore", "bel_edge_dedup_counts",
-        "bel_nodes", "bel_reactome_pathways"])
+        "bel_nodes", "bel_reactome_pathways", "bel_communities_lpa"])
     def test_query_matches_duckdb_twin(self, spark, name):
-        import duckdb
+        _assert_matches_twin(spark, name)
 
+    def test_repeat_calls_read_the_shared_edge_list(self, spark):
+        """The second call of each iterative query reads the (u, v) edge
+        list persisted by the first, and release_pins() between queries
+        leaves it persisted: a stale or wrongly shared cache shows as a
+        twin mismatch on the second round."""
+        from ebel_spark import queries as Q
         from ebel_spark.ops.dedup import release_pins
+
+        uv = Q._kg_uv_edges(spark)
+        for name in ["bel_kcore", "bel_communities_lpa"] * 2:
+            _assert_matches_twin(spark, name)
+            release_pins()
+            assert Q._kg_uv_edges(spark) is uv and uv.is_cached
+        assert Q._kg_statements(spark).is_cached
+
+    @pytest.mark.parametrize("name", ["bel_kcore", "bel_communities_lpa"])
+    def test_warm_call_runs_few_jobs(self, spark, name):
+        """On the oracle KG both iterative queries run in one task: one
+        warm call is at most 6 Spark jobs (19 and 23 as per-round Spark
+        loops), counted from a job group around the call."""
         from ebel_spark.queries import QUERIES
 
-        fn, sql = QUERIES[name]
-        release_pins()
-        # the bel_* queries read the oracle corpus, not the sf tables
-        sdf = fn(spark, None)
-        srows = [tuple(r) for r in sdf.collect()]
-        con = duckdb.connect()
-        res = con.sql(sql)
-        ocols, otypes = res.columns, [str(t) for t in res.types]
-        orows = res.fetchall()
-        assert sorted(c.lower() for c in sdf.columns) == \
-            sorted(c.lower() for c in ocols)
-        assert cc.dtype_mismatches(sdf.columns, [t for _, t in sdf.dtypes],
-                                   ocols, otypes) == []
-        assert srows
-        assert cc.norm_rows(sdf.columns, srows) == cc.norm_rows(ocols, orows)
+        fn = QUERIES[name][0]
+        fn(spark, None).collect()  # warm: the shared frames are filled
+        sc = spark.sparkContext
+        group = f"warm-{name}"
+        sc.setJobGroup(group, group)
+        try:
+            fn(spark, None).collect()
+        finally:
+            for prop in ("spark.jobGroup.id", "spark.job.description",
+                         "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(prop, None)
+        time.sleep(0.5)  # the status store is fed by an async listener
+        assert 0 < len(sc.statusTracker().getJobIdsForGroup(group)) <= 6
+
+
+def _assert_matches_twin(spark, name):
+    """One bel_* query against its DuckDB twin, compared the way
+    scripts/check_contract.py compares them."""
+    import duckdb
+
+    from ebel_spark.ops.dedup import release_pins
+    from ebel_spark.queries import QUERIES
+
+    fn, sql = QUERIES[name]
+    release_pins()
+    # the bel_* queries read the oracle corpus, not the sf tables
+    sdf = fn(spark, None)
+    srows = [tuple(r) for r in sdf.collect()]
+    con = duckdb.connect()
+    res = con.sql(sql)
+    ocols, otypes = res.columns, [str(t) for t in res.types]
+    orows = res.fetchall()
+    assert sorted(c.lower() for c in sdf.columns) == \
+        sorted(c.lower() for c in ocols)
+    assert cc.dtype_mismatches(sdf.columns, [t for _, t in sdf.dtypes],
+                               ocols, otypes) == []
+    assert srows
+    assert cc.norm_rows(sdf.columns, srows) == cc.norm_rows(ocols, orows)
 
 
 class TestLinkedAccTwin:

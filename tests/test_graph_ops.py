@@ -84,6 +84,15 @@ class TestKCore:
         assert got == {n: 3 for n in nodes}
 
 
+class TestKCoreSparkLoop(TestKCore):
+    """The same cases on the per-round Spark loop: these graphs are far
+    below graph._LOCAL_MAX_EDGES, so TestKCore runs them in one task."""
+
+    @pytest.fixture(autouse=True)
+    def _spark_loop(self, monkeypatch):
+        monkeypatch.setattr(G, "_LOCAL_MAX_EDGES", 0)
+
+
 class TestLabelPropagation:
     def test_two_cliques_with_bridge(self, spark):
         # two triangles joined by one bridge edge: LPA must converge to
@@ -112,6 +121,14 @@ class TestLabelPropagation:
         got = {r["bel"]: r["label"]
                for r in G.label_propagation(e, iters=1).collect()}
         assert got == {"h": "l1", "l1": "h", "l2": "h", "l3": "h"}
+
+
+class TestLabelPropagationSparkLoop(TestLabelPropagation):
+    """The same cases on the per-round Spark loop (see TestKCoreSparkLoop)."""
+
+    @pytest.fixture(autouse=True)
+    def _spark_loop(self, monkeypatch):
+        monkeypatch.setattr(G, "_LOCAL_MAX_EDGES", 0)
 
 
 class TestNeighborJaccard:

@@ -8,6 +8,8 @@ Example counts are kept small: every example runs real Spark jobs."""
 
 from __future__ import annotations
 
+from collections import Counter
+
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -27,6 +29,14 @@ weighted_edges_strategy = st.lists(
     min_size=1, max_size=12,
     unique_by=lambda t: (t[0], t[1]),
 )
+
+# endpoints for kcore_peel / label_propagation: null endpoints, and
+# non-ASCII names whose code-point order differs from UTF-16 order
+# ("\uff5a" < "\U0001f600" by code point, not in UTF-16); lists keep
+# self-loops, duplicate and reversed edges
+ENDPOINTS = st.sampled_from(["a", "b", "c", "d", "\u00e9", "\uff5a",
+                             "\U0001f600", None])
+raw_edges_strategy = st.lists(st.tuples(ENDPOINTS, ENDPOINTS), max_size=16)
 
 _SETTINGS = settings(
     max_examples=12, deadline=None,
@@ -99,6 +109,48 @@ def _py_shortest_cycles(edges, max_len):
     return out
 
 
+def _py_undirected(edges):
+    """undirected_edges in pure Python: no null endpoint, no self-loop,
+    (min, max) pairs, distinct."""
+    return {(min(u, v), max(u, v)) for u, v in edges
+            if u is not None and v is not None and u != v}
+
+
+def _py_kcore(edges, k, rounds):
+    """Synchronous k-core peeling, pure Python: {node: degree}."""
+    und = _py_undirected(edges)
+    for _ in range(rounds):
+        deg = Counter(n for e in und for n in e)
+        und = {(a, b) for a, b in und if deg[a] >= k and deg[b] >= k}
+    return dict(Counter(n for e in und for n in e))
+
+
+def _py_lpa(edges, iters):
+    """Synchronous label propagation, pure Python: the most frequent
+    neighbour label, ties to the smallest label.  {node: label}."""
+    nbrs = {}
+    for a, b in _py_undirected(edges):
+        nbrs.setdefault(a, []).append(b)
+        nbrs.setdefault(b, []).append(a)
+    labels = {n: n for n in nbrs}
+    for _ in range(iters):
+        new = {}
+        for n, hs in nbrs.items():
+            c = Counter(labels[h] for h in hs)
+            new[n] = min(c, key=lambda lab: (-c[lab], lab))
+        labels = new
+    return labels
+
+
+def _on_both_paths(fn):
+    """fn() in one task (these graphs are far below _LOCAL_MAX_EDGES),
+    then again on the per-round Spark loop."""
+    one_task = fn()
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(G, "_LOCAL_MAX_EDGES", 0)
+        return one_task, fn()
+
+
 class TestGraphOpsVsPythonReference:
     @_SETTINGS
     @given(weighted_edges_strategy)
@@ -127,3 +179,23 @@ class TestGraphOpsVsPythonReference:
         got = {(r["u"], r["v"]): r["cycle_len"]
                for r in G.cycle_edges(df, max_len=4).collect()}
         assert got == _py_shortest_cycles(edges, max_len=4)
+
+    @_SETTINGS
+    @given(raw_edges_strategy, st.integers(min_value=1, max_value=3))
+    def test_kcore_matches_python_peeling(self, spark, edges, k):
+        df = spark.createDataFrame(edges, "u string, v string")
+        want = _py_kcore(edges, k, rounds=4)
+        for got in _on_both_paths(lambda: {
+                r["bel"]: r["deg"]
+                for r in G.kcore_peel(df, k=k, rounds=4).collect()}):
+            assert got == want
+
+    @_SETTINGS
+    @given(raw_edges_strategy)
+    def test_lpa_matches_python_propagation(self, spark, edges):
+        df = spark.createDataFrame(edges, "u string, v string")
+        want = _py_lpa(edges, iters=3)
+        for got in _on_both_paths(lambda: {
+                r["bel"]: r["label"]
+                for r in G.label_propagation(df, iters=3).collect()}):
+            assert got == want
