@@ -19,6 +19,8 @@ DataFrame algebra:
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, Observation, functions as F
 from pyspark.sql.window import Window
 
@@ -90,6 +92,39 @@ def cut_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
     if sc.getCheckpointDir():
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)
+
+
+def iterate(step, state: DataFrame, rounds: int, stop=None):
+    """The round loop of every iterative graph operator: `rounds` times
+    state = step(state, i) for i = 0, 1, ..., with the lineage cuts and
+    the early stop decided here, once.
+
+    Without `stop`, lineage is cut after every second round and after
+    the last: two rounds per materialization keep the plan O(1) deep
+    while halving the per-round scheduling cost.  The values do not
+    depend on the cadence.
+
+    With a probe stop(prev, new) -> bool, every round's frame is cut
+    lazily and the probe's own action fills the checkpoint, so a probing
+    round runs one action, not an eager cut plus a probe.  The loop ends
+    after the first round whose probe holds.
+
+    -> (state, converged).  converged is true iff the probe held after
+    one of the first `rounds` rounds: a state still changing in round
+    `rounds` reports false even if round rounds + 1 would change nothing
+    (that round is never run).  Without a probe it is false.
+    """
+    for i in range(rounds):
+        new = step(state, i)
+        if stop is None:
+            state = cut_lineage(new) if i % 2 == 1 or i == rounds - 1 else new
+            continue
+        new = cut_lineage(new, eager=False)
+        held = stop(state, new)
+        state = new
+        if held:
+            return state, True
+    return state, False
 
 
 # ---------------------------------------------------------------------------
@@ -410,7 +445,8 @@ def pagerank(
     dst: str = "v",
 ) -> DataFrame:
     """PageRank over a directed edge list (columns `src`, `dst`), with
-    uniform redistribution of dangling-node mass.
+    uniform redistribution of dangling-node mass: personalized_pagerank
+    with the uniform teleport vector p(v) = 1/|V|.
 
     Each iteration is one shuffle-partitioned join (ranks ⋈ edges on the
     source key) plus a map-side-combined aggregation on the destination
@@ -423,66 +459,12 @@ def pagerank(
     hash-partitioned on the node key; the per-iteration join then
     co-locates and only the contribution aggregation shuffles.
     """
-    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    nodes = (
-        e.select(F.col("u").alias("bel"))
-        .union(e.select(F.col("v").alias("bel")))
-        .distinct()
-        .transform(cut_lineage)
-    )
-    n = nodes.count()
-    if n == 0:
-        # an empty edge frame has no nodes; 1.0/n below would raise
-        return nodes.select("bel", F.lit(0.0).alias("rank"))
-    outdeg = e.groupBy("u").agg(F.count(F.lit(1)).alias("odeg"))
-    # rank rows carry odeg so the dangling reduce and the contribution
-    # join both run off one cached frame per iteration
-    ranks = (
-        nodes.join(outdeg, nodes["bel"] == outdeg["u"], "left")
-        .select("bel", "odeg", F.lit(1.0 / n).alias("rank"))
-        .transform(cut_lineage)
-    )
-    base = (1.0 - damping) / n
-    for it in range(iters):
-        # dangling mass rides as a broadcast 1-row aggregate INSIDE the
-        # iteration's plan (crossJoin of a scalar frame) instead of a
-        # driver-side .first() — one action per iteration (the eager
-        # lineage cut), not two.  Same IEEE op order as the scalar form:
-        # double sum, divided by n, added to the contribution, scaled by
-        # damping.
-        dang = (
-            ranks.filter(F.col("odeg").isNull())
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dang_mass"))
-        )
-        contrib = (
-            e.join(ranks.filter(F.col("odeg").isNotNull()),
-                   e["u"] == ranks["bel"])
-            .groupBy("v")
-            .agg(F.sum(F.col("rank") / F.col("odeg")).alias("contrib"))
-        )
-        ranks = (
-            ranks.drop("rank")
-            .join(contrib, ranks["bel"] == contrib["v"], "left")
-            .crossJoin(F.broadcast(dang))
-            .select(
-                "bel", "odeg",
-                (F.lit(base) + F.lit(damping)
-                 * (F.coalesce(F.col("contrib"), F.lit(0.0))
-                    + F.col("dang_mass") / F.lit(float(n)))).alias("rank"),
-            )
-        )
-        # materialize every second round (and the last): two join+agg
-        # rounds per action keeps the plan shallow while halving the
-        # per-round scheduling/materialization overhead — same values,
-        # only the action cadence changes
-        if it % 2 == 1 or it == iters - 1:
-            ranks = cut_lineage(ranks)
-    return ranks.select("bel", "rank")
+    return personalized_pagerank(edges, None, damping, iters, src, dst)
 
 
 def personalized_pagerank(
     edges: DataFrame,
-    seeds: DataFrame,
+    seeds: DataFrame | None,
     damping: float = 0.85,
     iters: int = 10,
     src: str = "u",
@@ -498,12 +480,12 @@ def personalized_pagerank(
     `seeds` needs a `bel` column; seeds not present as graph nodes are
     ignored (mass normalizes over S ∩ V).  An empty intersection returns
     all-zero ranks (no teleport source) rather than raising — the
-    documented degenerate case.
+    documented degenerate case.  seeds=None is uniform PageRank
+    (`pagerank`).
 
-    Same per-iteration shape as `pagerank` (one source-key join + one
-    map-side-combined destination agg + a broadcast scalar dangling
-    reduce; lineage cut every second round), so every scale property of
-    the uniform op carries over; the seed vector rides as one extra
+    Per iteration: one source-key join + one map-side-combined
+    destination agg + a broadcast scalar dangling reduce, lineage cut
+    every second round (`iterate`); the seed vector rides as one extra
     column on the rank frame, not a per-iteration join.
     """
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
@@ -513,23 +495,41 @@ def personalized_pagerank(
         .distinct()
         .transform(cut_lineage)
     )
-    seed_nodes = nodes.join(
-        seeds.select(F.col("bel").alias("__sb")).distinct(),
-        nodes["bel"] == F.col("__sb")).select("bel")
-    s = seed_nodes.count()
-    p = (1.0 / s) if s else 0.0
+    if seeds is None:
+        n = nodes.count()
+        if n == 0:
+            # an empty edge frame has no nodes; 1.0/n below would raise
+            return nodes.select("bel", F.lit(0.0).alias("rank"))
+        ranks = nodes.withColumn("rank", F.lit(1.0 / n))
+        # the uniform teleport keeps its own IEEE op order, (1-d)/n and
+        # dangling/n, rather than multiplying by p = 1/n
+        teleport = F.lit((1.0 - damping) / n)
+        dangling = F.col("dang_mass") / F.lit(float(n))
+    else:
+        seed_nodes = nodes.join(
+            seeds.select(F.col("bel").alias("__sb")).distinct(),
+            nodes["bel"] == F.col("__sb")).select("bel")
+        s = seed_nodes.count()
+        p = (1.0 / s) if s else 0.0
+        ranks = (
+            nodes.join(seed_nodes.withColumn("__seed", F.lit(1)), "bel", "left")
+            .select("bel", F.when(F.col("__seed").isNotNull(), F.lit(p))
+                    .otherwise(F.lit(0.0)).alias("p"))
+            .withColumn("rank", F.col("p"))
+        )
+        teleport = F.lit(1.0 - damping) * F.col("p")
+        dangling = F.col("dang_mass") * F.col("p")
     outdeg = e.groupBy("u").agg(F.count(F.lit(1)).alias("odeg"))
-    ranks = (
-        nodes.join(seed_nodes.withColumn("__seed", F.lit(1)), "bel", "left")
-        .join(outdeg, nodes["bel"] == outdeg["u"], "left")
-        .select(
-            "bel", "odeg",
-            F.when(F.col("__seed").isNotNull(), F.lit(p))
-            .otherwise(F.lit(0.0)).alias("p"))
-        .withColumn("rank", F.col("p"))
-        .transform(cut_lineage)
-    )
-    for it in range(iters):
+    # rank rows carry odeg so the dangling reduce and the contribution
+    # join both run off one cached frame per iteration
+    ranks = (ranks.join(outdeg, ranks["bel"] == outdeg["u"], "left")
+             .drop("u").transform(cut_lineage))
+    keep = [c for c in ranks.columns if c != "rank"]
+
+    def step(ranks, _):
+        # dangling mass rides as a broadcast 1-row aggregate INSIDE the
+        # iteration's plan (crossJoin of a scalar frame) instead of a
+        # driver-side .first() action
         dang = (
             ranks.filter(F.col("odeg").isNull())
             .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dang_mass"))
@@ -540,19 +540,16 @@ def personalized_pagerank(
             .groupBy("v")
             .agg(F.sum(F.col("rank") / F.col("odeg")).alias("contrib"))
         )
-        ranks = (
+        return (
             ranks.drop("rank")
             .join(contrib, ranks["bel"] == contrib["v"], "left")
             .crossJoin(F.broadcast(dang))
-            .select(
-                "bel", "odeg", "p",
-                (F.lit(1.0 - damping) * F.col("p") + F.lit(damping)
-                 * (F.coalesce(F.col("contrib"), F.lit(0.0))
-                    + F.col("dang_mass") * F.col("p"))).alias("rank"),
-            )
+            .select(*keep, (teleport + F.lit(damping)
+                            * (F.coalesce(F.col("contrib"), F.lit(0.0))
+                               + dangling)).alias("rank"))
         )
-        if it % 2 == 1 or it == iters - 1:
-            ranks = cut_lineage(ranks)
+
+    ranks, _ = iterate(step, ranks, iters)
     return ranks.select("bel", "rank")
 
 
@@ -571,9 +568,10 @@ def hits(
     Same distributed shape as `pagerank`: each half-step is one
     shuffle-partitioned join on the edge key plus a map-side-combined
     aggregation on the opposite key; the normalizer rides as a broadcast
-    1-row aggregate inside the plan (never a driver collect); lineage is
-    cut per iteration so the plan stays O(1) deep.  Returns
-    (bel, hub, auth) for every node.
+    1-row aggregate inside the plan (never a driver collect).  A round of
+    `iterate` is one half-step, so its every-second-round cut lands once
+    per iteration and the plan stays O(1) deep.  Returns (bel, hub, auth)
+    for every node.
     """
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     nodes = (
@@ -585,34 +583,30 @@ def hits(
     if nodes.isEmpty():
         return nodes.select("bel", F.lit(0.0).alias("hub"),
                             F.lit(0.0).alias("auth"))
-    scores = nodes.select("bel", F.lit(1.0).alias("hub"),
-                          F.lit(0.0).alias("auth"))
-    for _ in range(iters):
-        a_raw = (
-            e.join(scores.select(F.col("bel").alias("u"), "hub"), "u")
-            .groupBy("v").agg(F.sum("hub").alias("a_raw"))
+
+    def half_step(scores, i):
+        # even rounds score authorities from the hubs pointing at them,
+        # odd rounds hubs from the authorities they point at and carry
+        # the authorities along
+        frm, to, given, scored = (("u", "v", "hub", "auth") if i % 2 == 0
+                                  else ("v", "u", "auth", "hub"))
+        raw = (
+            e.join(scores.select(F.col("bel").alias(frm), given), frm)
+            .groupBy(to).agg(F.sum(given).alias("raw"))
         )
-        sa = a_raw.agg(F.sum("a_raw").alias("s_a"))
-        auth = (
-            nodes.join(a_raw, nodes["bel"] == a_raw["v"], "left")
-            .crossJoin(F.broadcast(sa))
-            .select("bel", (F.coalesce(F.col("a_raw"), F.lit(0.0))
-                            / F.col("s_a")).alias("auth"))
+        total = raw.agg(F.sum("raw").alias("total"))
+        out = (
+            nodes.join(raw, nodes["bel"] == raw[to], "left")
+            .crossJoin(F.broadcast(total))
+            .select("bel", (F.coalesce(F.col("raw"), F.lit(0.0))
+                            / F.col("total")).alias(scored))
         )
-        h_raw = (
-            e.join(auth.select(F.col("bel").alias("v"), "auth"), "v")
-            .groupBy("u").agg(F.sum("auth").alias("h_raw"))
-        )
-        sh = h_raw.agg(F.sum("h_raw").alias("s_h"))
-        scores = (
-            nodes.join(h_raw, nodes["bel"] == h_raw["u"], "left")
-            .crossJoin(F.broadcast(sh))
-            .select("bel", (F.coalesce(F.col("h_raw"), F.lit(0.0))
-                            / F.col("s_h")).alias("hub"))
-            .join(auth, "bel")
-            .select("bel", "hub", "auth")
-            .transform(cut_lineage)
-        )
+        if i % 2 == 0:
+            return out
+        return out.join(scores, "bel").select("bel", "hub", "auth")
+
+    scores, _ = iterate(half_step, nodes.select(
+        "bel", F.lit(1.0).alias("hub"), F.lit(0.0).alias("auth")), 2 * iters)
     return scores
 
 
@@ -753,14 +747,11 @@ def ktruss_peel(
 
     rounds=None peels TO the fixpoint — the exact k-truss (r4 VERDICT #5):
     each round's surviving-edge count is compared to the previous round's
-    (one driver-side count() over the already-checkpointed frame, so it
-    schedules no recompute) and peeling stops when no edge dropped,
-    bounded by `max_rounds`.  The output then carries a constant
-    `converged` column, the signal a fixed unrolling cannot give:
-    converged is true iff one of the first `max_rounds` rounds removed no
-    edge.  A graph that still drops an edge in round `max_rounds` reports
-    false, even if round max_rounds + 1 would have removed nothing (that
-    round is never run).  The fixed-`rounds`
+    (the count is the probe whose action fills the round's checkpoint)
+    and peeling stops when no edge dropped, bounded by `max_rounds`.  The
+    output then carries a constant `converged` column, the signal a
+    fixed unrolling cannot give, with `iterate`'s meaning: true iff one
+    of the first `max_rounds` rounds removed no edge.  The fixed-`rounds`
     mode is kept as the oracle-twin protocol (DuckDB unrolls the same
     round count).
     The edge-centric sibling of kcore_peel: where k-core trims low-degree
@@ -768,9 +759,9 @@ def ktruss_peel(
     the standard cohesive-core extraction before relation-cluster mining.
 
     Each round recomputes per-edge support with the compact-forward
-    enumeration on the CURRENT edge set, then semi-joins the survivors;
-    lineage cut per round.  The graph is ORIENTED ONCE by initial
-    (degree, id) — correctness of the enumeration needs only a fixed
+    enumeration on the CURRENT edge set, then semi-joins the survivors
+    (`iterate` places the lineage cuts).  The graph is ORIENTED ONCE by
+    initial (degree, id) — correctness of the enumeration needs only a fixed
     total order on nodes, and peeling never invalidates it; skipping the
     per-round degree aggregation + re-orientation saves ~3 shuffles per
     round (support VALUES are orientation-independent, so the SQL twin
@@ -789,20 +780,20 @@ def ktruss_peel(
     converged = True  # k <= 2: the whole graph IS the k-truss, trivially
 
     if k > 2:
-        converged = False
-        prev = o.count() if fixpoint else None
-        for _ in range(max_rounds if fixpoint else rounds):
+        def peel(o, _):
             sup = _support_of_oriented(o)
-            o = o.join(
+            return o.join(
                 sup.filter(F.col("support") >= k - 2).select("a", "b"),
-                ["a", "b"], "left_semi",
-            ).transform(cut_lineage)
-            if fixpoint:
-                n = o.count()
-                if n == prev:
-                    converged = True
-                    break
-                prev = n
+                ["a", "b"], "left_semi")
+
+        sizes = [o.count()] if fixpoint else None
+
+        def no_edge_dropped(_, new):
+            sizes.append(new.count())
+            return sizes[-1] == sizes[-2]
+
+        o, converged = iterate(peel, o, max_rounds if fixpoint else rounds,
+                               no_edge_dropped if fixpoint else None)
     final = _support_of_oriented(o)
     out = (
         o.select("a", "b").join(final, ["a", "b"], "left")
@@ -938,34 +929,44 @@ def bfs_depths(
     """Single-source shortest-path depths over a DIRECTED edge list by
     frontier-expansion BFS: each level is one equi-join (frontier x edges
     on the source key) plus an anti-join against the visited set — the
-    standard Pregel level-synchronous formulation as DataFrame rounds,
-    with cut_lineage cutting lineage per level.
+    standard Pregel level-synchronous formulation as DataFrame rounds
+    (`_levels`), stopping early at an empty frontier.
 
     `source` is a 1-row DataFrame with a `bel` column (kept as a frame so
     the whole computation stays declarative — no driver-side collect of
     graph data).  Returns (bel, dist) for every node within `max_depth`.
     """
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).distinct()
-    visited = source.select("bel", F.lit(0).alias("dist")).transform(cut_lineage)
-    frontier = visited
-    for depth in range(1, max_depth + 1):
-        nxt = (
+
+    def expand(frontier, visited, i):
+        return (
             e.join(frontier.select(F.col("bel").alias("u")), "u", "left_semi")
             .select(F.col("v").alias("bel"))
             .distinct()
             .join(visited, "bel", "left_anti")
-            .select("bel", F.lit(depth).alias("dist"))
-            .transform(cut_lineage)
+            .select("bel", F.lit(i + 1).alias("dist"))
         )
-        if nxt.isEmpty():
-            break
-        # visited stays a plain union of the (already checkpointed)
-        # per-level frontiers — the plan is a flat union of <= max_depth
-        # checkpoint scans, so re-cutting it each round would only add a
-        # second materialization per level for no depth reduction
-        visited = visited.unionAll(nxt)
-        frontier = nxt
-    return visited
+
+    first = source.select("bel", F.lit(0).alias("dist")).transform(cut_lineage)
+    return _levels(first, expand, max_depth)
+
+
+def _levels(first: DataFrame, expand, rounds: int) -> DataFrame:
+    """The union of all frontiers of a level-synchronous expansion:
+    frontier i+1 = expand(frontier i, union of frontiers 0..i, i), for
+    `rounds` levels or until a frontier is empty (bfs_depths,
+    cycle_edges).  Only the new frontier is cut each level.  The union
+    stays a flat union of <= rounds + 1 checkpoint scans, so re-cutting
+    it each level would add a materialization per level for no depth
+    reduction."""
+    levels = []
+
+    def step(frontier, i):
+        levels.append(frontier)
+        return expand(frontier, reduce(DataFrame.unionByName, levels), i)
+
+    last, _ = iterate(step, first, rounds, stop=lambda _, new: new.isEmpty())
+    return reduce(DataFrame.unionByName, levels + [last])
 
 
 def sssp_relax(
@@ -989,30 +990,28 @@ def sssp_relax(
     Scale shape: per round ONE equi-join of the |V|-bounded dist frame
     against the edge list on the source key (edges stay sharded; dist
     is the small side) and one map-side-combinable min-groupBy; lineage
-    cut per round, rounds bounds the shuffle count.  `source` is a
+    cut by `iterate`, rounds bounds the shuffle count.  `source` is a
     DataFrame with a `bel` column (no driver-side graph data).
 
     Returns (bel, dist) for every node reached within `rounds` hops.
     """
     e = (edges.select(F.col(src).alias("u"), F.col(dst).alias("v"),
                       F.col(cost).cast("long").alias("cost"))
-         .distinct())
-    dist = (source.select("bel", F.lit(0).cast("long").alias("dist"))
-            .transform(cut_lineage))
-    for _ in range(rounds):
+         .distinct().transform(cut_lineage))
+
+    def relax(dist, _):
         relaxed = (
             e.join(dist.select(F.col("bel").alias("u"),
                                F.col("dist").alias("du")), "u")
             .select(F.col("v").alias("bel"),
                     (F.col("du") + F.col("cost")).alias("dist"))
         )
-        dist = (
-            dist.unionByName(relaxed)
-            .groupBy("bel")
-            .agg(F.min("dist").alias("dist"))
-            .transform(cut_lineage)
-        )
-    return dist
+        return (dist.unionByName(relaxed)
+                .groupBy("bel").agg(F.min("dist").alias("dist")))
+
+    dist = (source.select("bel", F.lit(0).cast("long").alias("dist"))
+            .transform(cut_lineage))
+    return iterate(relax, dist, rounds)[0]
 
 
 #: Largest canonical undirected edge list that kcore_peel and
@@ -1111,7 +1110,7 @@ def kcore_peel(
     Up to _LOCAL_MAX_EDGES undirected edges, all rounds run in one
     pandas task.  Above it, each round is one degree aggregation plus
     two semi-joins that keep only edges whose BOTH endpoints survive —
-    all equi-joins on node keys, lineage cut per round.  Returns
+    all equi-joins on node keys, lineage cut by `iterate`.  Returns
     (bel, deg): surviving nodes with their degree in the peeled
     subgraph.
     """
@@ -1120,7 +1119,8 @@ def kcore_peel(
         return _in_one_task(
             e, lambda und: _kcore_pandas(und, k, rounds),
             "bel string, deg long")
-    for it in range(rounds):
+
+    def peel(e, _):
         deg = (
             e.select(F.col("a").alias("n"))
             .unionAll(e.select(F.col("b").alias("n")))
@@ -1128,15 +1128,12 @@ def kcore_peel(
             .agg(F.count(F.lit(1)).alias("d"))
         )
         keep = deg.filter(F.col("d") >= k).select("n")
-        e = (
+        return (
             e.join(keep.select(F.col("n").alias("a")), "a", "left_semi")
             .join(keep.select(F.col("n").alias("b")), "b", "left_semi")
         )
-        # materialize every second peel (and the last): same
-        # action-cadence trade as pagerank — two agg+semi-join rounds per
-        # materialization, identical fixpoint values
-        if it % 2 == 1 or it == rounds - 1:
-            e = cut_lineage(e)
+
+    e, _ = iterate(peel, e, rounds)
     return (
         e.select(F.col("a").alias("bel"))
         .unionAll(e.select(F.col("b").alias("bel")))
@@ -1162,7 +1159,7 @@ def label_propagation(
     pandas task.  Above it, each round is one equi-join (adjacency x
     labels on the neighbor key) plus a count aggregation and a per-node
     top-1 window — the standard Pregel LPA round as DataFrame algebra,
-    lineage cut per round.  At cluster scale, hash-partition `adj` and
+    lineage cut by `iterate`.  At cluster scale, hash-partition `adj` and
     `labels` on the node key once and every round's join co-locates;
     only the count shuffle remains.
 
@@ -1177,22 +1174,20 @@ def label_propagation(
     labels = adj.select(F.col("n").alias("bel")).distinct().select(
         "bel", F.col("bel").alias("label"))
     w = Window.partitionBy("n").orderBy(F.desc("c"), F.asc("label"))
-    for it in range(iters):
+
+    def propagate(labels, _):
         counts = (
             adj.join(labels, adj["h"] == labels["bel"])
             .groupBy("n", "label")
             .agg(F.count(F.lit(1)).alias("c"))
         )
-        labels = (
+        return (
             counts.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") == 1)
             .select(F.col("n").alias("bel"), "label")
         )
-        # pagerank's action-cadence trade: two LPA rounds per
-        # materialization, identical label fixpoint
-        if it % 2 == 1 or it == iters - 1:
-            labels = cut_lineage(labels)
-    return labels
+
+    return iterate(propagate, labels, iters)[0]
 
 
 #: fixed-point scale for Adamic-Adar contributions (see adamic_adar)
@@ -1885,32 +1880,32 @@ def cycle_edges(
 
     Scale shape: a bounded-hop pair closure — per level ONE equi-join
     of the frontier against the edge list plus a per-(a, b) anti-join
-    against the visited pair set (first-visit = shortest hops), lineage
-    cut per level, max_len bounds the shuffle count.  The pair table is
-    the cost (sum of k-hop neighborhoods); max_len <= ~4 keeps it
-    near-linear on sparse KGs, and hub fanout can be pre-capped by
-    filtering the edge list like every other wedge op here.
+    against the visited pair set (first-visit = shortest hops): the
+    frontier expansion of bfs_depths (`_levels`: lineage cut per level,
+    early stop at an empty frontier); max_len bounds the shuffle count.
+    The pair table is the cost (sum of k-hop neighborhoods); max_len
+    <= ~4 keeps it near-linear on sparse KGs, and hub fanout can be
+    pre-capped by filtering the edge list like every other wedge op
+    here.
 
     Returns (u, v, cycle_len) for edges on a cycle, cycle_len >= 2.
     """
     e = (edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
          .filter(F.col("u") != F.col("v")).distinct()
          .transform(cut_lineage))
-    reach = e.select(F.col("u").alias("a"), F.col("v").alias("b"),
-                     F.lit(1).alias("hops"))
-    frontier = reach
-    for k in range(2, max_len):
-        nxt = (
+
+    def expand(frontier, reach, i):
+        return (
             frontier.select("a", F.col("b").alias("u"))
             .join(e, "u")
             .select("a", F.col("v").alias("b"))
             .distinct()
             .join(reach.select("a", "b"), ["a", "b"], "left_anti")
-            .withColumn("hops", F.lit(k))
-            .transform(cut_lineage)
+            .withColumn("hops", F.lit(i + 2))
         )
-        reach = reach.unionByName(nxt)
-        frontier = nxt
+
+    reach = _levels(e.select(F.col("u").alias("a"), F.col("v").alias("b"),
+                             F.lit(1).alias("hops")), expand, max_len - 2)
     back = reach.select(F.col("a").alias("v"), F.col("b").alias("u"),
                         "hops")
     return (

@@ -18,7 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..graph import cut_lineage
+from ..graph import cut_lineage, iterate
 
 from .text import _kgram_hashes_from_tokens, shingles, tokens, with_shingles
 
@@ -319,9 +319,11 @@ def connected_components(
     long chains converge in O(log n) rounds instead of O(diameter), which is
     the property that matters at 10^12-node scale (cf. the Hash-to-Min /
     two-phase CC MapReduce algorithms); near-dup graphs are usually
-    shallow, so typical runs take 2-4 rounds.  Lineage is truncated with
-    cut_lineage (reliable checkpoint when a checkpoint dir is
-    set, else localCheckpoint) every round so the plan stays O(1) deep.
+    shallow, so typical runs take 2-4 rounds.  The rounds run through
+    graph.iterate: each round's labels are cut lazily (reliable checkpoint
+    when a checkpoint dir is set, else localCheckpoint) and the
+    changed-label probe's one action fills the cut, so the plan stays
+    O(1) deep.
     """
     edges = pairs.select(F.col(a).alias("u"), F.col(b).alias("v"))
     edges = (
@@ -336,7 +338,7 @@ def connected_components(
         labels = labels.union(node_ids).distinct()
     labels = labels.withColumn("label", F.col("id")).transform(cut_lineage)
 
-    for _ in range(max_iter):
+    def relabel(labels, _):
         # (1) pull the min label across each node's neighborhood
         nbr = (
             edges.join(labels.withColumnRenamed("id", "v"), "v")
@@ -347,23 +349,16 @@ def connected_components(
             .groupBy("id").agg(F.min("label").alias("label"))
         )
         # (2) pointer jumping: label(id) := label(label(id))
-        hop = new.select(F.col("id").alias("label"),
-                         F.col("label").alias("label2"))
-        new = (
-            new.join(hop, "label", "left")
-            .select("id", F.coalesce("label2", "label").alias("label"))
-            .transform(lambda d: cut_lineage(d, eager=False))
-        )
-        # single action per round: the convergence probe materializes the
-        # (lazy) checkpoint as a side effect
-        changed = (
-            new.join(labels.withColumnRenamed("label", "old"), "id")
-            .filter(F.col("label") != F.col("old"))
-            .limit(1).count()
-        )
-        labels = new
-        if changed == 0:
-            break
+        jump = new.select(F.col("id").alias("label"),
+                          F.col("label").alias("label2"))
+        return (new.join(jump, "label", "left")
+                .select("id", F.coalesce("label2", "label").alias("label")))
+
+    def unchanged(old, new):
+        return new.join(old.withColumnRenamed("label", "old"), "id").filter(
+            F.col("label") != F.col("old")).limit(1).count() == 0
+
+    labels, _ = iterate(relabel, labels, max_iter, unchanged)
     return labels.select("id", F.col("label").alias("cluster_id"))
 
 

@@ -58,6 +58,19 @@ def driver_memory_conf(cores: int, mem_kb: int | None = None) -> dict:
             "spark.driver.extraJavaOptions": f"-Dlog4j2.level=error -Xms{mem}"}
 
 
+def _export_package_root() -> None:
+    """Put the directory that holds the ebel_spark package on PYTHONPATH.
+    Python workers are started by the JVM with the environment it
+    inherited at launch, not with this process's sys.path, so a driver
+    that found the package only through sys.path (a script run from
+    another directory) would hand every worker UDFs that fail with
+    ModuleNotFoundError.  Must run before the JVM starts."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if root not in paths:
+        os.environ["PYTHONPATH"] = os.pathsep.join([root, *paths])
+
+
 def get_spark(
     cores: int | None = None,
     app_name: str = "ebel-spark",
@@ -159,6 +172,7 @@ def get_spark(
         b = b.config(k.strip(), v.strip())
     for k, v in (extra or {}).items():
         b = b.config(k, v)
+    _export_package_root()
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     return spark

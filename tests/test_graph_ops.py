@@ -7,6 +7,8 @@ twins on the full oracle corpus; these tests pin the semantics on graphs
 small enough to verify by eye.
 """
 
+import time
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -42,6 +44,59 @@ class TestTriangles:
     def test_square_has_none(self, spark):
         e = _edges(spark, [("a", "b"), ("b", "c"), ("c", "d"), ("d", "a")])
         assert G.triangle_counts(e).count() == 0
+
+
+def _jobs(spark, fn):
+    """(fn(), Spark jobs it ran), counted from a job group around it."""
+    sc = spark.sparkContext
+    group = f"jobs-{time.monotonic_ns()}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description",
+                     "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    time.sleep(0.5)  # the status store is fed by an async listener
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+class TestIterate:
+    """graph.iterate decides the lineage-cut cadence and the early stop
+    of every iterative operator.  The state is one partition and the
+    step a shuffle-free projection, so every cut or probe is one job."""
+
+    def test_cadence_stop_and_converged(self, spark):
+        start = spark.range(0, 4, 1, 1)  # ids 0..3; round r gives r..r+3
+
+        def step(df, _):
+            return df.select((F.col("id") + 1).alias("id"))
+
+        # no probe: eager cuts after rounds 2, 4 and the last
+        for rounds, cuts in [(4, 2), (5, 3)]:
+            (out, converged), jobs = _jobs(
+                spark, lambda: G.iterate(step, start, rounds))
+            assert (jobs, converged) == (cuts, False)
+            assert sorted(r.id for r in out.collect()) == [
+                rounds, rounds + 1, rounds + 2, rounds + 3]
+
+        # the probe first holds after round 3: one action per probing
+        # round (the probe fills the lazy cut), converged iff it held
+        # within `rounds`, and no round after it runs
+        calls = []
+
+        def low_ids_gone(prev, new):
+            calls.append(1)
+            return new.filter(F.col("id") < 3).isEmpty()
+
+        for rounds, want_converged, want_rounds in [
+                (2, False, 2), (3, True, 3), (5, True, 3)]:
+            calls.clear()
+            (out, converged), jobs = _jobs(
+                spark, lambda: G.iterate(step, start, rounds, low_ids_gone))
+            assert converged is want_converged
+            assert len(calls) == jobs == want_rounds
+            assert min(r.id for r in out.collect()) == want_rounds
 
 
 class TestBfs:

@@ -1,5 +1,10 @@
 """The session's default driver heap: 1.5 GB per task slot, capped at 75%
-of physical memory, pinned with -Xms.  No Spark session is started."""
+of physical memory, pinned with -Xms; and the package's visibility to the
+Python workers.  No Spark session is started in this process."""
+
+import os
+import subprocess
+import sys
 
 import pytest
 
@@ -59,3 +64,33 @@ def test_xms_pins_driver_memory(cores, mem_kb):
     xms = [o for o in conf["spark.driver.extraJavaOptions"].split()
            if o.startswith("-Xms")]
     assert xms == ["-Xms" + conf["spark.driver.memory"]]
+
+
+def test_workers_import_package_found_only_on_sys_path(tmp_path):
+    """A driver that found ebel_spark through sys.path alone, run from
+    another directory: the Python workers of its pandas UDFs import
+    ebel_spark too."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = f"""
+import sys
+sys.path.insert(0, {repo!r})
+import pandas as pd
+from pyspark.sql import functions as F
+from ebel_spark.session import get_spark
+
+spark = get_spark(cores=1, app_name="worker-import")
+
+@F.pandas_udf("string")
+def package_name(s: pd.Series) -> pd.Series:
+    import ebel_spark
+    return s.map(lambda _: ebel_spark.__name__)
+
+print(spark.range(1).select(package_name(F.col("id").cast("string"))).first()[0])
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_DRIVER_MEM"] = "1g"
+    run = subprocess.run([sys.executable, "-c", script], cwd=tmp_path,
+                         env=env, capture_output=True, text=True,
+                         timeout=300)
+    assert run.returncode == 0, run.stderr[-3000:]
+    assert run.stdout.split()[-1] == "ebel_spark"
