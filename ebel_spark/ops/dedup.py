@@ -355,8 +355,9 @@ def connected_components(
                 .select("id", F.coalesce("label2", "label").alias("label")))
 
     def unchanged(old, new):
-        return new.join(old.withColumnRenamed("label", "old"), "id").filter(
-            F.col("label") != F.col("old")).limit(1).count() == 0
+        changed = (new.join(old.withColumnRenamed("label", "old"), "id")
+                   .filter(F.col("label") != F.col("old")))
+        return changed.limit(1).count() == 0
 
     labels, _ = iterate(relabel, labels, max_iter, unchanged)
     return labels.select("id", F.col("label").alias("cluster_id"))
