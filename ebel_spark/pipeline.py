@@ -169,10 +169,10 @@ def run_pipeline(
         # would then re-append the same files — duplicating every
         # downstream count.  The store is the source of truth for what
         # was parsed; lineage is a derived report.
-        if resume and _exists(spark, parsed_path):
+        if resume and S.has_data(spark, parsed_path):
             done = spark.read.parquet(parsed_path).select("file_sha")
             todo = src.join(done, "file_sha", "left_anti")
-        elif _exists(spark, parsed_path):
+        elif S.has_data(spark, parsed_path):
             raise ValueError(
                 f"parsed store already exists at {parsed_path}; pass "
                 "resume=True to continue it or choose a fresh out_dir "
@@ -217,12 +217,12 @@ def run_pipeline(
         metrics["n_statements"] = int(lin["n_statements"] or 0)
 
     # ---- 2. derived tables -------------------------------------------------
-    # Multi-consumer intermediates are written to parquet under _stage/ and
-    # read back: the write cuts the lineage, so no consumer re-executes the
-    # parse/aggregate DAG above it (at 100 TB a multi-x recompute of the
-    # most expensive stages).  Persisting them MEMORY_AND_DISK instead
-    # measured ~2x slower on a 4-core host: the edge DAG re-executed inside
-    # the final write, 1576 tasks against 336.
+    # Multi-consumer intermediates (nodes0, edges_stmt, nodes2) are written
+    # to parquet under _stage/ and read back: the write cuts the lineage,
+    # so no consumer re-executes the parse/aggregate DAG above it (at 100 TB
+    # a multi-x recompute of the most expensive stages).  Persisting them
+    # MEMORY_AND_DISK instead measured ~2x slower on a 4-core host: the
+    # edge DAG re-executed inside the final write, 1576 tasks against 336.
     def _ckpt(df: DataFrame, name: str) -> DataFrame:
         p = os.path.join(out_dir, "_stage", name)
         df.write.mode("overwrite").parquet(p)
@@ -234,15 +234,14 @@ def run_pipeline(
 
     # ---- 3. validation -------------------------------------------------------
     with stage("validate"):
-        # the entry/definition tables are tiny next to the wide parsed
-        # table; checkpointing them means the 4 validation families read a
-        # narrow table instead of re-exploding the nested parse output 4x
-        entries = _ckpt(P.entries_table(parsed), "entries")
-        defs = _ckpt(P.definitions_table(parsed), "defs")
-        ok_files = parsed.filter("ok").select("file_sha")
+        # semantic errors apply to parseable files only.  Validation is one
+        # join of their entries against their definitions, so both are
+        # exploded straight from the parsed store (column pruning keeps the
+        # scan narrow): with a single consumer there is nothing to
+        # checkpoint
+        ok = parsed.filter("ok")
         sem_errors = V.semantic_errors(
-            entries.join(ok_files, "file_sha", "left_semi"),
-            defs.join(ok_files, "file_sha", "left_semi"),
+            P.entries_table(ok), P.definitions_table(ok),
             dim_dfs["ns_dict"], dim_dfs["anno_dict"],
             with_hints=with_hints,
         )
@@ -369,14 +368,6 @@ def verify_invariant(spark: SparkSession, src: DataFrame, out_dir: str) -> int:
         .select("file_sha").distinct()
     expected = P.with_file_sha(src).select("file_sha").distinct()
     return expected.join(docs, "file_sha", "left_anti").count()
-
-
-def _exists(spark: SparkSession, path: str) -> bool:
-    try:
-        spark.read.parquet(path).limit(1).collect()
-        return True
-    except Exception:
-        return False
 
 
 # ---------------------------------------------------------------------------

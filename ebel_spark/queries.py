@@ -4246,24 +4246,18 @@ JOIN defs d ON d.file_sha = e.file_sha AND d.kind = e.kind
 WHERE NOT regexp_matches(e.entry, '^' || d.value || '$')
 """)
 def bel_semantic_errors(spark, sf_dir):
-    """The four SQL-expressible validation families (validate.py) run as
-    DataFrame joins over the SAME parquet the oracle SQL reads — two
-    independent implementations of the validation relational logic."""
+    """The four SQL-expressible validation families, run as the one
+    classified join of validate.semantic_errors over the SAME parquet the
+    oracle SQL's four-way union reads — two independent implementations
+    of the validation relational logic."""
     from . import validate as V
     base = _ensure_oracle()
-    entries = spark.read.parquet(f"{base}/entries")
-    defs = spark.read.parquet(f"{base}/defs")
-    ns_dict = spark.read.parquet(f"{base}/ns_dict")
-    anno_dict = spark.read.parquet(f"{base}/anno_dict")
-    fams = (
-        V.undefined_keyword_errors(entries, defs)
-        .unionByName(V.url_membership_errors(entries, defs, ns_dict,
-                                             anno_dict, with_hints=False))
-        .unionByName(V.list_membership_errors(entries, defs))
-        .unionByName(V.pattern_errors(entries, defs))
-    )
-    return fams.select("file_sha", "error_class", "keyword", "entry",
-                       "line_number")
+    sem = V.semantic_errors(
+        *(spark.read.parquet(f"{base}/{t}")
+          for t in ("entries", "defs", "ns_dict", "anno_dict")),
+        with_hints=False)
+    return sem.select("file_sha", "error_class", "keyword", "entry",
+                      "line_number")
 
 
 # -- flagship outputs, full-value oracles -----------------------------------
@@ -4331,10 +4325,9 @@ def bel_validation_errors(spark, sf_dir):
     from .namespaces import build_dimensions, dims_to_spark
     parsed = _bel_oracle_parsed(spark)
     dims = dims_to_spark(spark, build_dimensions())
-    ok = parsed.filter("ok").select("file_sha")
+    ok = parsed.filter("ok")
     sem = V.semantic_errors(
-        P.entries_table(parsed).join(ok, "file_sha", "left_semi"),
-        P.definitions_table(parsed).join(ok, "file_sha", "left_semi"),
+        P.entries_table(ok), P.definitions_table(ok),
         dims["ns_dict"], dims["anno_dict"], with_hints=False)
     out = P.syntax_errors_table(parsed).unionByName(sem, allowMissingColumns=True)
     return out.select("file_sha", "error_class", "keyword", "entry",

@@ -45,6 +45,30 @@ def require_iceberg(spark: SparkSession, catalog: str) -> None:
         ) from ex
 
 
+def has_data(spark: SparkSession, path: str) -> bool:
+    """Whether a table directory holds a data file, probed on the Hadoop
+    file system rather than by a Spark read (a failed read logs a listener
+    error with a long stack trace).  A missing path and a directory that
+    holds only hidden entries, e.g. the `_temporary` of a crashed first
+    write, both count as absent; hidden follows Spark's file index: a
+    `.` name, or a `_` name that is not a `col=value` partition."""
+    jvm = spark.sparkContext._jvm
+    root = jvm.org.apache.hadoop.fs.Path(path)
+    fs = root.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+
+    def found(p) -> bool:
+        for st in fs.listStatus(p):
+            name = st.getPath().getName()
+            if name.startswith(".") or (name.startswith("_")
+                                        and "=" not in name):
+                continue
+            if st.isFile() or found(st.getPath()):
+                return True
+        return False
+
+    return bool(fs.exists(root)) and found(root)
+
+
 def write_table(
     spark: SparkSession,
     df: DataFrame,

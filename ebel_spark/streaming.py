@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .parse import parse_sources
 from .schemas import SOURCE_SCHEMA
+from .sinks import has_data
 
 
 def stream_sources(
@@ -329,13 +330,6 @@ def stream_event_counts(
 # incremental KG construction (foreachBatch upsert)
 # ---------------------------------------------------------------------------
 
-def _path_exists(spark: SparkSession, path: str) -> bool:
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(conf).exists(p)
-
-
 def _merge_edges(old: DataFrame, new: DataFrame) -> DataFrame:
     """Associative edge merge: document sets union, statement counts sum,
     payload first-writer-wins (the same contract as the batch two-phase
@@ -426,7 +420,7 @@ def stream_graph_upsert(
         # without this the accumulated counts would depend on micro-batch
         # boundaries and break the equals-one-shot-batch invariant
         batch_df = batch_df.dropDuplicates(["file_sha"])
-        if _path_exists(spark, lineage_path):
+        if has_data(spark, lineage_path):
             seen = spark.read.parquet(lineage_path)
             batch_df = batch_df.join(seen, "file_sha", "left_anti")
         batch_df = batch_df.localCheckpoint(eager=True)
@@ -439,10 +433,10 @@ def stream_graph_upsert(
         # nodes writes below leaves edges present but nodes absent, and a
         # single edges-gated check would then throw PATH_NOT_FOUND on
         # every foreachBatch retry — bricking the stream permanently
-        if _path_exists(spark, edges_path):
+        if has_data(spark, edges_path):
             new_edges = _merge_edges(spark.read.parquet(edges_path),
                                      new_edges)
-        if _path_exists(spark, nodes_path):
+        if has_data(spark, nodes_path):
             new_nodes = _merge_nodes(spark.read.parquet(nodes_path),
                                      new_nodes)
         new_edges.localCheckpoint(eager=True) \

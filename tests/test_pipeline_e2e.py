@@ -14,6 +14,11 @@ SNAPSHOT_METRICS = {
     "n_files": 20, "n_statements": 572, "n_valid_files": 19, "n_errors": 26,
     "n_triples": 1293, "n_edges": 1411, "n_nodes": 1493,
 }
+# the n_errors rows per error_class
+SNAPSHOT_ERRORS = {
+    "BelSyntaxError_unexpected_token": 1, "NotInAnnotationList": 12,
+    "NotInNamespaceUrl": 13,
+}
 SNAPSHOT_RELATIONS = {
     "association": 25, "causes_no_change": 12, "decreases": 104,
     "directly_decreases": 44, "directly_increases": 67, "equivalent_to": 6,
@@ -73,6 +78,10 @@ class TestPipelineE2E:
         assert {k: m[k] for k in SNAPSHOT_METRICS} == SNAPSHOT_METRICS
         edges = spark.read.parquet(out["dir"] + "/edges")
         nodes = spark.read.parquet(out["dir"] + "/nodes")
+        errors = spark.read.parquet(out["dir"] + "/errors")
+        assert {r["error_class"]: r["count"] for r in
+                errors.groupBy("error_class").count().collect()} \
+            == SNAPSHOT_ERRORS
         assert {r["relation"]: r["count"] for r in
                 edges.groupBy("relation").count().collect()} \
             == SNAPSHOT_RELATIONS
@@ -98,6 +107,8 @@ class TestPipelineE2E:
         top = [s for s in jobs if "." not in s]
         assert m["n_jobs"] == sum(jobs[s] for s in top) > 0
         assert all(jobs[s] > 0 for s in ("parse", "validate", "write"))
+        # validation is one classified join: 15 jobs on this corpus
+        assert jobs["validate"] <= 15
         assert m["task_slots"] == spark.sparkContext.defaultParallelism
         assert m["driver_memory"] == spark.conf.get("spark.driver.memory")
         assert out["group_after"] == "e2e-caller"

@@ -85,3 +85,21 @@ class TestClusteredWrite:
         got = spark.read.parquet(path).filter("k BETWEEN 10 AND 20") \
             .count()
         assert got == df.filter("k BETWEEN 10 AND 20").count()
+
+
+class TestHasData:
+    def test_missing_crashed_and_written(self, spark, tmp_path):
+        assert not sinks.has_data(spark, str(tmp_path / "missing"))
+        # a first append that crashed leaves only Spark's staging dir
+        crashed = tmp_path / "crashed"
+        (crashed / "_temporary" / "0").mkdir(parents=True)
+        (crashed / "_temporary" / "0" / "part-00000.parquet").write_bytes(b"x")
+        assert not sinks.has_data(spark, str(crashed))
+        written = str(tmp_path / "written")
+        spark.range(3).write.parquet(written)
+        assert sinks.has_data(spark, written)
+        # data files below partition directories count too
+        parted = str(tmp_path / "parted")
+        spark.range(3).withColumn("p", F.col("id") % 2) \
+            .write.partitionBy("p").parquet(parted)
+        assert sinks.has_data(spark, parted)

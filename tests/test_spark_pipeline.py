@@ -6,6 +6,7 @@ protein2gene extension, polymorphic counts over the class hierarchy).
 """
 
 import os
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -298,9 +299,53 @@ class TestValidation:
         # every entry under the broken pattern is reported, with a hint
         broken = [e for e in errors if e.entry in ("rs123", "rs456")
                   and e.error_class == "NotInNamespacePattern"]
-        assert {e.entry for e in broken} >= {"rs456"}
+        assert {e.entry for e in broken} == {"rs123", "rs456"}
         assert all("invalid PATTERN regex" in (e.hint or "")
                    for e in broken)
+
+    @pytest.mark.parametrize("with_hints", [True, False])
+    def test_error_multiplicity(self, spark, dims, with_hints):
+        # one error row per (entry, matching definition): K is both a
+        # LIST and a URL namespace (its URL matches no dictionary), D is
+        # a LIST defined twice, and O is defined only in the other file,
+        # so its use in the first file has exactly one undefined row
+        first = (
+            'SET DOCUMENT Name = "t"\n'
+            'DEFINE NAMESPACE K AS LIST {"a", "b"}\n'
+            'DEFINE NAMESPACE K AS URL "http://x/k.belns"\n'
+            'DEFINE NAMESPACE D AS LIST {"x"}\n'
+            'DEFINE NAMESPACE D AS LIST {"y"}\n'
+            'p(K:a) -> p(K:zz)\n'
+            'p(D:x) -> p(D:q)\n'
+            'p(O:foo) -> p(K:b)\n'
+        )
+        second = (
+            'SET DOCUMENT Name = "t2"\n'
+            'DEFINE NAMESPACE O AS LIST {"foo"}\n'
+            'p(O:foo) -> p(O:bar)\n'
+        )
+        src = _source_df(spark, [first, second])
+        parsed = P.parse_sources(src)
+        errors = V.semantic_errors(
+            P.entries_table(parsed), P.definitions_table(parsed),
+            dims["ns_dict"], dims["anno_dict"], with_hints=with_hints,
+        ).collect()
+        got = Counter((e.error_class, e.keyword, e.entry, e.line_number)
+                      for e in errors)
+        assert got == Counter({
+            ("NotInNamespaceUrl", "K", "a", 6): 1,
+            ("NotInNamespaceList", "K", "zz", 6): 1,
+            ("NotInNamespaceUrl", "K", "zz", 6): 1,
+            ("NotInNamespaceList", "D", "x", 7): 1,
+            ("NotInNamespaceList", "D", "q", 7): 2,
+            ("WithoutDefinedNamespace", "O", "foo", 8): 1,
+            ("NotInNamespaceUrl", "K", "b", 8): 1,
+            ("NotInNamespaceList", "O", "bar", 3): 1,
+        })
+        url = {e.url for e in errors if e.error_class == "NotInNamespaceUrl"}
+        assert url == {"http://x/k.belns"}
+        assert all(e.url is None for e in errors
+                   if e.error_class != "NotInNamespaceUrl")
 
     def test_ols_hint_urlencodes_reserved_chars(self, spark, dims):
         bel = (
