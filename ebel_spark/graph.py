@@ -21,7 +21,9 @@ from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import DataFrame, Observation, functions as F
+import numpy as np
+import pandas as pd
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
 from .belc.vocab import (
@@ -1014,47 +1016,47 @@ def sssp_relax(
     return iterate(relax, dist, rounds)[0]
 
 
-#: Largest canonical undirected edge list that kcore_peel and
-#: label_propagation run inside ONE pandas task (all rounds, no per-round
-#: jobs) instead of the per-round Spark loop.  Measured on seeded random
-#: graphs (|V| = |E|/2; k=2, 6 rounds; 5 LPA rounds), local[4], 4-core /
-#: 15.7 GB host, warm session, seconds per call (runs 2-3 of 3), one task
-#: vs Spark loop:
+#: Largest INPUT edge list (edges.count(): rows before canonicalization,
+#: an upper bound on the undirected edges) that kcore_peel and
+#: label_propagation run inside ONE pandas task (canonicalization and all
+#: rounds, no per-round jobs) instead of the per-round Spark loop.
+#: Measured on seeded random graphs (|V| = |E|/2; k=2, 6 rounds; 5 LPA
+#: rounds), local[4], 4-core / 15.7 GB host, warm session, seconds per
+#: call (runs 2-3 of 3), one task vs Spark loop:
 #:   10k edges:  k-core 0.64-0.69 vs 2.15-2.38, LPA 0.53-0.54 vs 2.00-2.02
 #:   100k edges: k-core 0.68-0.75 vs 2.84-2.95, LPA 0.88-1.04 vs 4.82-4.89
 #:   1M edges:   k-core 3.34-3.38 vs 18.7-19.4, LPA 6.6-7.2 vs 15.8-17.5
-#: One task wins at every size.  At 1M edges its pandas step allocates
-#: at most ~160 MB (k-core) / ~250 MB (LPA) over a 23 MB Arrow input
-#: (tracemalloc, the same functions outside Spark).  Larger graphs were
-#: not measured, so they keep the Spark loop.
+#: One task wins at every size.  At 1M input rows (|V| = |E|/2, ~20-char
+#: names) the task function (pandas canonicalization, then the k-core or
+#: LPA rounds) allocates at most 151 MB (k-core) / 234 MB (LPA) over its
+#: ~143 MB of pandas input batches (tracemalloc, the same function
+#: outside Spark).  Larger graphs were not measured, so they keep the
+#: Spark loop.
 _LOCAL_MAX_EDGES = 1_000_000
 
 
-def _undirected_cut(edges: DataFrame, src: str, dst: str):
-    """undirected_edges, lineage-cut, plus its row count: the size probe
-    of the in-task fork.  The count is observed by the cut's own job, so
-    it costs no extra job and neither path computes the input twice.
-    -> (cut frame, n undirected edges)"""
-    obs = Observation()
-    e = cut_lineage(undirected_edges(edges, src, dst).observe(
-        obs, F.count(F.lit(1)).alias("n")))
-    return e, obs.get["n"]
+def _in_one_task(edges, src, dst, schema, fn, *args) -> DataFrame:
+    """fn(und, *args) -> pandas frame in ONE task, und being the
+    undirected_edges (a, b) rows of edges as one pandas frame: edges are
+    coalesced to one partition and canonicalized as undirected_edges does
+    (null endpoints and self-loops dropped, a = min, b = max, duplicates
+    dropped; Python compares str by code point, the same order as
+    Spark's UTF-8 binary order).  A caller's narrow upstream plan runs
+    in that task too.  No edge left -> no batch: an empty frame."""
+    def task(batches):
+        e = pd.concat([*batches, pd.DataFrame(columns=["u", "v"])]).dropna()
+        und = pd.DataFrame(np.sort(e[e["u"] != e["v"]].to_numpy(), axis=1),
+                           columns=["a", "b"]).drop_duplicates()
+        if len(und):
+            yield fn(und, *args)
 
-
-def _in_one_task(df: DataFrame, fn, schema: str) -> DataFrame:
-    """Run fn(pandas frame of all of df) -> pandas frame in one task: the
-    grouped-map pattern over a single literal group.  The key is a
-    literal COLUMN: groupBy(F.lit(0)) raises an internal error on Spark
-    4.1."""
-    return (df.withColumn("_one_task", F.lit(0)).groupBy("_one_task")
-            .applyInPandas(fn, schema))
+    return (edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+            .coalesce(1).mapInPandas(task, schema))
 
 
 def _kcore_pandas(und, k: int, rounds: int):
     """kcore_peel's rounds over the undirected_edges (a, b) rows, on
     integer node codes."""
-    import numpy as np
-    import pandas as pd
     codes, names = pd.factorize(pd.concat([und["a"], und["b"]]))
     m = len(und)
     a, b = codes[:m], codes[m:]
@@ -1076,8 +1078,6 @@ def _lpa_pandas(und, iters: int):
     smallest label.  Nodes become integer codes in sorted order (Python
     compares str by code point, the same order as Spark's UTF-8 binary
     order), so the smallest code is the smallest label."""
-    import numpy as np
-    import pandas as pd
     codes, names = pd.factorize(pd.concat([und["a"], und["b"]]), sort=True)
     m, n_nodes = len(und), len(names)
     # (n, h): every edge in both directions
@@ -1107,18 +1107,19 @@ def kcore_peel(
     k-core is the fixpoint).  Pruning the low-degree fringe is the
     standard KG-cleaning pass before community/centrality analyses.
 
-    Up to _LOCAL_MAX_EDGES undirected edges, all rounds run in one
-    pandas task.  Above it, each round is one degree aggregation plus
-    two semi-joins that keep only edges whose BOTH endpoints survive —
-    all equi-joins on node keys, lineage cut by `iterate`.  Returns
-    (bel, deg): surviving nodes with their degree in the peeled
-    subgraph.
+    Up to _LOCAL_MAX_EDGES input rows (edges.count(), an upper bound on
+    the undirected edges), the whole operator runs in one pandas task
+    (_in_one_task): one job plus the count.  A caller's narrow upstream
+    plan runs in that task too, so pass a persisted edge list.  Above
+    it, each round is one degree aggregation plus two semi-joins that
+    keep only edges whose BOTH endpoints survive — all equi-joins on
+    node keys, lineage cut by `iterate`.  Returns (bel, deg): surviving
+    nodes with their degree in the peeled subgraph.
     """
-    e, n = _undirected_cut(edges, src, dst)
-    if n <= _LOCAL_MAX_EDGES:
-        return _in_one_task(
-            e, lambda und: _kcore_pandas(und, k, rounds),
-            "bel string, deg long")
+    if edges.count() <= _LOCAL_MAX_EDGES:
+        return _in_one_task(edges, src, dst, "bel string, deg long",
+                            _kcore_pandas, k, rounds)
+    e = cut_lineage(undirected_edges(edges, src, dst))
 
     def peel(e, _):
         deg = (
@@ -1155,9 +1156,10 @@ def label_propagation(
     result is reproducible across any partitioning (and expressible as a
     SQL twin).
 
-    Up to _LOCAL_MAX_EDGES undirected edges, all rounds run in one
-    pandas task.  Above it, each round is one equi-join (adjacency x
-    labels on the neighbor key) plus a count aggregation and a per-node
+    Up to _LOCAL_MAX_EDGES input rows, the whole operator runs in one
+    pandas task, as in kcore_peel (a caller's narrow upstream plan runs
+    in that task too).  Above it, each round is one equi-join (adjacency
+    x labels on the neighbor key) plus a count aggregation and a per-node
     top-1 window — the standard Pregel LPA round as DataFrame algebra,
     lineage cut by `iterate`.  At cluster scale, hash-partition `adj` and
     `labels` on the node key once and every round's join co-locates;
@@ -1165,10 +1167,10 @@ def label_propagation(
 
     Returns (bel, label) after `iters` rounds.
     """
-    und, n = _undirected_cut(edges, src, dst)
-    if n <= _LOCAL_MAX_EDGES:
-        return _in_one_task(und, lambda e: _lpa_pandas(e, iters),
-                            "bel string, label string")
+    if edges.count() <= _LOCAL_MAX_EDGES:
+        return _in_one_task(edges, src, dst, "bel string, label string",
+                            _lpa_pandas, iters)
+    und = cut_lineage(undirected_edges(edges, src, dst))
     adj = und.select(F.col("a").alias("n"), F.col("b").alias("h")).unionAll(
         und.select(F.col("b").alias("n"), F.col("a").alias("h")))
     labels = adj.select(F.col("n").alias("bel")).distinct().select(

@@ -95,27 +95,33 @@ class TestBelQueryTwins:
         _assert_matches_twin(spark, name)
 
     def test_repeat_calls_read_the_shared_edge_list(self, spark):
-        """The second call of each iterative query reads the (u, v) edge
-        list persisted by the first, and release_pins() between queries
-        leaves it persisted: a stale or wrongly shared cache shows as a
-        twin mismatch on the second round."""
+        """The second call of each query reads the (u, v) edge list or
+        the edge table persisted by the first, and release_pins() between
+        queries leaves them persisted: a stale or wrongly shared cache
+        shows as a twin mismatch on the second round."""
         from ebel_spark import queries as Q
         from ebel_spark.ops.dedup import release_pins
 
-        uv = Q._kg_uv_edges(spark)
-        for name in ["bel_kcore", "bel_communities_lpa"] * 2:
+        uv, edges = Q._kg_uv_edges(spark), Q._kg_edges(spark)
+        for name in ["bel_kcore", "bel_communities_lpa",
+                     "bel_edge_dedup_counts"] * 2:
             _assert_matches_twin(spark, name)
             release_pins()
             assert Q._kg_uv_edges(spark) is uv and uv.is_cached
+            assert Q._kg_edges(spark) is edges and edges.is_cached
         assert Q._kg_statements(spark).is_cached
 
-    @pytest.mark.parametrize("name", ["bel_kcore", "bel_communities_lpa"])
+    @pytest.mark.parametrize("name", [
+        "bel_kcore", "bel_communities_lpa", "bel_edge_dedup_counts"])
     def test_warm_call_runs_few_jobs(self, spark, name):
-        """On the oracle KG both iterative queries run in one task: one
-        warm call is at most 6 Spark jobs (19 and 23 as per-round Spark
-        loops), counted from a job group around the call."""
+        """On the oracle KG both iterative queries run in one task over
+        the persisted (u, v) list, and the edge dedup counts read the
+        persisted edge table: one warm call is at most 3 Spark jobs (19
+        and 23 as per-round Spark loops), 2 for the dedup counts,
+        counted from a job group around the call."""
         from ebel_spark.queries import QUERIES
 
+        most = {"bel_edge_dedup_counts": 2}.get(name, 3)
         fn = QUERIES[name][0]
         fn(spark, None).collect()  # warm: the shared frames are filled
         sc = spark.sparkContext
@@ -128,7 +134,7 @@ class TestBelQueryTwins:
                          "spark.job.interruptOnCancel"):
                 sc.setLocalProperty(prop, None)
         time.sleep(0.5)  # the status store is fed by an async listener
-        assert 0 < len(sc.statusTracker().getJobIdsForGroup(group)) <= 6
+        assert 0 < len(sc.statusTracker().getJobIdsForGroup(group)) <= most
 
 
 def _assert_matches_twin(spark, name):

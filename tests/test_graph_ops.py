@@ -186,6 +186,61 @@ class TestLabelPropagationSparkLoop(TestLabelPropagation):
         monkeypatch.setattr(G, "_LOCAL_MAX_EDGES", 0)
 
 
+_SMALL_GRAPH_OPS = {
+    "kcore": (lambda e: G.kcore_peel(e, k=2, rounds=6),
+              [("bel", "string"), ("deg", "bigint")]),
+    "lpa": (lambda e: G.label_propagation(e, iters=5),
+            [("bel", "string"), ("label", "string")]),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_SMALL_GRAPH_OPS))
+class TestOneTaskFork:
+    """kcore_peel / label_propagation run in one task up to
+    _LOCAL_MAX_EDGES INPUT rows (the size probe is edges.count(), not the
+    undirected edge count), and the Spark loop above it."""
+
+    @pytest.fixture
+    def one_task_calls(self, monkeypatch):
+        calls = []
+        real = G._in_one_task
+
+        def spy(*args):
+            calls.append(args)
+            return real(*args)
+
+        monkeypatch.setattr(G, "_in_one_task", spy)
+        return calls
+
+    def test_probe_counts_input_rows(self, spark, op, one_task_calls,
+                                     monkeypatch):
+        # 6 rows, reversed and repeated, of the 3 undirected triangle edges
+        e = _edges(spark, [("a", "b"), ("b", "a"), ("b", "c"), ("c", "b"),
+                           ("a", "c"), ("a", "c")])
+        fn, _ = _SMALL_GRAPH_OPS[op]
+        monkeypatch.setattr(G, "_LOCAL_MAX_EDGES", 6)
+        in_task = sorted(map(tuple, fn(e).collect()))
+        assert len(one_task_calls) == 1
+        monkeypatch.setattr(G, "_LOCAL_MAX_EDGES", 4)
+        spark_loop = sorted(map(tuple, fn(e).collect()))
+        assert len(one_task_calls) == 1  # 6 input rows > 4: Spark loop
+        assert spark_loop == in_task and len(in_task) == 3
+
+    @pytest.mark.parametrize("limit", [None, 0])
+    @pytest.mark.parametrize("pairs", [
+        [], [("a", "a"), ("b", "b")], [(None, "a"), ("b", None),
+                                       (None, None)]],
+        ids=["empty", "self_loops", "null_endpoints"])
+    def test_no_edge_is_an_empty_frame(self, spark, op, pairs, limit,
+                                       monkeypatch):
+        fn, schema = _SMALL_GRAPH_OPS[op]
+        if limit is not None:
+            monkeypatch.setattr(G, "_LOCAL_MAX_EDGES", limit)
+        out = fn(_edges(spark, pairs))
+        assert out.dtypes == schema
+        assert out.collect() == []
+
+
 class TestNeighborJaccard:
     def test_identical_neighbor_sets(self, spark):
         # x and y share exactly {h1, h2}: jaccard 1.0 (and symmetrically
